@@ -6,7 +6,8 @@ Prints ONE JSON line:
    "queries": {name: sec, ...}, "sf": ..., "throughput_rows_per_sec": ...}
 
 Modes:
-  python bench.py              # single run at $SPARK_GRAFT_CPUS (default 32)
+  python bench.py              # single run at $SPARK_GRAFT_CPUS (default: the CPUs
+                               #   this process may run on)
   python bench.py --cpus 8     # explicit parallelism (used by --scaling)
   python bench.py --scaling    # run at local[8] and local[32] in fresh
                                # subprocesses, compute N→4N scaling
@@ -338,6 +339,8 @@ def run_weak_scaling() -> None:
 
 
 if __name__ == "__main__":
+    from tree_sitter_analyzer_spark.session import DEFAULT_CPUS
+
     if "--scaling" in sys.argv:
         if "--levels" in sys.argv:
             lo, hi = map(int, sys.argv[sys.argv.index("--levels") + 1].split(","))
@@ -352,10 +355,10 @@ if __name__ == "__main__":
         print(_mp_control_inproc(procs, per))
     elif "--pipeline" in sys.argv:
         cpus = int(sys.argv[sys.argv.index("--cpus") + 1]) if "--cpus" in sys.argv \
-            else int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+            else DEFAULT_CPUS
         print(json.dumps(run_pipeline_job(cpus)))
     else:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = DEFAULT_CPUS
         if "--cpus" in sys.argv:
             cpus = int(sys.argv[sys.argv.index("--cpus") + 1])
         print(json.dumps(run_bench(cpus)))

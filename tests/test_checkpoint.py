@@ -49,6 +49,24 @@ def test_resume_after_crash(spark, tmp_path):
     os.remove(os.path.join(root, "extract", "_COMMITTED.json"))
     ckpt.run_stage(spark, root, "extract", "fp", build)
     assert len(calls) == 2
+    # the uncommitted attempt's audit rows are replaced, not added to
+    marker = json.load(open(os.path.join(root, "extract", "_COMMITTED.json")))
+    audit = ckpt.audit_table(spark, root).where("stage = 'extract'").collect()
+    assert sum(r["rows"] for r in audit) == marker["rows"] == 1500
+
+
+def test_audit_keeps_other_stages_and_stage_types(spark, tmp_path):
+    """A stage's audit rewrite leaves every other stage's rows alone, and
+    a numeric-looking stage name reads back as the string it was."""
+    root = str(tmp_path / "job")
+    build = _build_counter(spark, [])
+    ckpt.run_stage(spark, root, "extract", "fp", build)
+    ckpt.run_stage(spark, root, "7", "fp", build)
+    ckpt.run_stage(spark, root, "7", "fp2", build)
+    rows = {}
+    for r in ckpt.audit_table(spark, root).collect():
+        rows[r["stage"]] = rows.get(r["stage"], 0) + r["rows"]
+    assert rows == {"extract": 1500, "7": 1500}
 
 
 def test_audit_lineage_rows(spark, tmp_path):

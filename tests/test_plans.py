@@ -35,11 +35,14 @@ def test_pip_join_is_broadcast_map_side(spark):
 
 
 def test_tiles_scan_prunes_columns(spark):
-    """Synth reads only o_orderkey from the seed parquet — ReadSchema must
-    be single-column (column pruning through the expression layer)."""
-    df = synth.tiles_df(spark, SF_TINY)
-    plan = plan_of(df)
+    """Synth reads only o_orderkey from the seed parquet — ReadSchema of
+    the plan tiles_df materializes must be single-column (column pruning
+    through the expression layer); tiles_df itself is one scan of the
+    materialized leaf, with no file scan left in the plan."""
+    plan = plan_of(synth.tiles_plan(spark, SF_TINY))
     assert "ReadSchema: struct<o_orderkey:bigint>" in plan
+    served = plan_of(synth.tiles_df(spark, SF_TINY))
+    assert "Scan ExistingRDD" in served and "ReadSchema" not in served
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -127,11 +130,11 @@ def test_zonal_weighted_single_terminal_exchange(spark):
     plan = plan_of(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    # exactly two exchanges: the deliberate seed-spread repartition inside
-    # tiles_df (one-file synthetic parquet) and the terminal agg — nothing
-    # between the candidate join and the roll-up (no distinct).
+    # exactly one exchange: the terminal agg — nothing between the
+    # candidate join and the roll-up (no distinct). The seed-spread
+    # repartition ran once, inside the materialized tiles leaf.
     n_exchanges = plan.count(") Exchange\n")
-    assert n_exchanges == 2, f"expected 2 shuffles, plan has {n_exchanges}"
+    assert n_exchanges == 1, f"expected 1 shuffle, plan has {n_exchanges}"
 
 
 def _join_lines(df) -> list[str]:

@@ -1,0 +1,151 @@
+"""The materialized tiles table: ``synth.tiles_df`` serves one shallow,
+locally checkpointed leaf per source snapshot and variant, rebuilds it
+when ``orders.parquet`` changes, and releases evicted blocks."""
+
+from __future__ import annotations
+
+import sys
+import threading
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from tree_sitter_analyzer_spark import synth
+
+from .conftest import SF_TINY
+
+
+def write_orders(path, keys) -> str:
+    path.mkdir(parents=True, exist_ok=True)
+    pq.write_table(pa.table({"o_orderkey": pa.array(keys, pa.int64())}),
+                   path / "orders.parquet")
+    return str(path)
+
+
+def persisted(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+@pytest.fixture
+def fresh(spark):
+    synth.drop_tiles_cache()
+    yield
+    synth.drop_tiles_cache()
+
+
+def test_same_snapshot_shares_one_materialization(spark, fresh):
+    before = persisted(spark)
+    a = synth.tiles_df(spark, SF_TINY)
+    after_first = persisted(spark)
+    b = synth.tiles_df(spark, SF_TINY)
+    assert a is b
+    assert len(after_first - before) == 1
+    assert persisted(spark) == after_first
+    assert a.count() == 1500
+
+
+def test_downstream_plan_has_no_lcg_expressions(spark, fresh):
+    q = synth.tiles_df(spark, SF_TINY).where("tile_kind = 'park'").groupBy("fmt").count()
+    analyzed = q._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" in analyzed
+    assert str(synth.M31) not in analyzed and "69621" not in analyzed
+    assert "o_orderkey" not in analyzed
+    # the plan it was materialized from is the LCG projection
+    source = synth.tiles_plan(spark, SF_TINY)._jdf.queryExecution().analyzed().toString()
+    assert str(synth.M31) in source
+
+
+def test_in_place_rewrite_returns_new_rows(spark, fresh, tmp_path):
+    sf = write_orders(tmp_path, range(100))
+    old = synth.tiles_df(spark, sf)
+    assert old.count() == 100
+    held = persisted(spark)
+    sf = write_orders(tmp_path, range(1000, 1250))
+    new = synth.tiles_df(spark, sf)
+    assert new is not old
+    got = sorted(r["i"] for r in new.select("i").collect())
+    assert got == list(range(1000, 1250))
+    # the stale snapshot's blocks are released, not left for the LRU
+    assert len(persisted(spark)) == len(held)
+
+
+def test_variants_never_collide(spark, fresh, monkeypatch):
+    plain = synth.tiles_df(spark, SF_TINY)
+    amp = synth.tiles_df(spark, SF_TINY, amplify=2)
+    monkeypatch.setenv("SPARK_GRAFT_AMPLIFY", "3")
+    env_amp = synth.tiles_df(spark, SF_TINY)
+    monkeypatch.delenv("SPARK_GRAFT_AMPLIFY")
+    monkeypatch.setenv("SPARK_GRAFT_DENSE", "1")
+    dense = synth.tiles_df(spark, SF_TINY)
+    monkeypatch.delenv("SPARK_GRAFT_DENSE")
+    wb = synth.tiles_df(spark, SF_TINY, with_bytes=True)
+
+    assert (plain.count(), amp.count(), env_amp.count(), dense.count()) == (
+        1500, 3000, 4500, 1500)
+    assert len({id(d) for d in (plain, amp, env_amp, dense)}) == 4
+    lon = {r["i"]: r["lon"] for r in plain.select("i", "lon").collect()}
+    dlon = {r["i"]: r["lon"] for r in dense.select("i", "lon").collect()}
+    assert lon != dlon
+    # bytes are attached on top of the shared leaf, never cached with it
+    assert "bytes" in wb.columns and "bytes" not in plain.columns
+    assert synth.tiles_df(spark, SF_TINY) is plain
+    assert "bytes" not in synth.tiles_df(spark, SF_TINY).columns
+    assert wb.where("bytes IS NULL").count() == 0
+
+
+def test_eviction_returns_persistent_rdds_to_baseline(spark, fresh, tmp_path):
+    base = persisted(spark)
+    slots = synth.TILES_CACHE_SLOTS
+    first = None
+    for n in range(slots + 2):
+        df = synth.tiles_df(spark, write_orders(tmp_path / f"s{n}", range(10 + n)))
+        if n == 0:
+            first = df
+        assert len(persisted(spark) - base) == min(n + 1, slots)
+    assert df.count() == 10 + slots + 1
+    # the evicted first snapshot rebuilds as a new materialization
+    rebuilt = synth.tiles_df(spark, str(tmp_path / "s0"))
+    assert rebuilt is not first and rebuilt.count() == 10
+    synth.drop_tiles_cache()
+    assert persisted(spark) == base
+
+
+@pytest.mark.parametrize("n_threads", [4, 8])
+def test_concurrent_first_calls_build_once(spark, fresh, tmp_path, monkeypatch, n_threads):
+    """More first callers than cores, with frequent thread switches: one
+    build, and every caller gets that build."""
+    sf = write_orders(tmp_path, range(300))
+    builds = []
+    plan = synth.tiles_plan
+
+    def counting_plan(*a, **kw):
+        builds.append(threading.get_ident())
+        return plan(*a, **kw)
+
+    monkeypatch.setattr(synth, "tiles_plan", counting_plan)
+    barrier = threading.Barrier(n_threads)
+    got, errors = [], []
+
+    def call():
+        try:
+            barrier.wait(timeout=60)
+            got.append(synth.tiles_df(spark, sf))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=call) for _ in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(builds) == 1
+    assert len(got) == n_threads and all(d is got[0] for d in got)
+    assert got[0].count() == 300

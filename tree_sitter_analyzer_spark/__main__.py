@@ -30,7 +30,7 @@ def main(argv: list[str] | None = None) -> int:
     runp.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     runp.add_argument("--limit", type=int, default=20)
     runp.add_argument("--format", choices=["json", "csv", "compact"], default="json")
-    runp.add_argument("--cpus", type=int, default=8)
+    runp.add_argument("--cpus", type=int, default=None)
 
     exp = sub.add_parser(
         "explain", help="show a registered query's physical plan"
@@ -42,14 +42,14 @@ def main(argv: list[str] | None = None) -> int:
         choices=["simple", "formatted", "extended", "cost"],
         default="formatted",
     )
-    exp.add_argument("--cpus", type=int, default=8)
+    exp.add_argument("--cpus", type=int, default=None)
 
     selp = sub.add_parser(
         "select", help="run a selector string over the tiles table"
     )
     selp.add_argument("selector")
     selp.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    selp.add_argument("--cpus", type=int, default=8)
+    selp.add_argument("--cpus", type=int, default=None)
     selp.add_argument(
         "--table", choices=["tiles", "documents"], default="tiles",
         help="which table the selector runs over",
@@ -65,7 +65,7 @@ def main(argv: list[str] | None = None) -> int:
     sqlp.add_argument("query")
     sqlp.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     sqlp.add_argument("--limit", type=int, default=20)
-    sqlp.add_argument("--cpus", type=int, default=8)
+    sqlp.add_argument("--cpus", type=int, default=None)
 
     args = p.parse_args(argv)
 

@@ -12,8 +12,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Local test box has 32 cores; a real deployment overrides via spark-submit.
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] defaults to the CPUs this process may run on; SPARK_GRAFT_CPUS
+# overrides it, and a real deployment sets its master via spark-submit.
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 
 def get_spark(

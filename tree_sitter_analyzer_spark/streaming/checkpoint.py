@@ -9,7 +9,8 @@ that let an interrupted index resume and skip already-converged phases
 Here each job stage:
 - writes its output as parquet under ``<root>/<stage>/data``;
 - writes per-partition lineage metrics (partition id, row count,
-  approximate bytes) to an audit table ``<root>/_audit``;
+  approximate bytes) to the stage's partition of an audit table
+  ``<root>/_audit``, replacing any rows an uncommitted attempt left;
 - commits a marker file ``<root>/<stage>/_COMMITTED.json`` recording the
   stage's input fingerprint.
 
@@ -35,10 +36,19 @@ def _marker_path(root: str, stage: str) -> str:
     return os.path.join(root, stage, "_COMMITTED.json")
 
 
+# The audit table is read with this schema, so the ``stage`` partition
+# column is never type-inferred (a stage named "7" stays a string).
+AUDIT_SCHEMA = "_pid INT, rows BIGINT, committed_at TIMESTAMP, stage STRING"
+
+
 def write_audit(spark: SparkSession, root: str, stage: str, df: DataFrame) -> None:
     """Per-partition lineage metrics → audit table (SURVEY.md I6: the
     activation/metrics table analog). One row per partition: row count +
-    a size proxy; plus a stage-level stamp."""
+    a size proxy; plus a stage-level stamp.
+
+    Each stage owns the ``stage=<name>`` partition of the table and every
+    write replaces it whole, so a re-run after a crash between this write
+    and the marker commit leaves one set of rows for the stage, not two."""
     metrics = (
         df.withColumn("_pid", F.spark_partition_id())
         .groupBy("_pid")
@@ -46,7 +56,12 @@ def write_audit(spark: SparkSession, root: str, stage: str, df: DataFrame) -> No
         .withColumn("stage", F.lit(stage))
         .withColumn("committed_at", F.current_timestamp())
     )
-    metrics.write.mode("append").parquet(os.path.join(root, "_audit"))
+    (
+        metrics.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("stage")
+        .parquet(os.path.join(root, "_audit"))
+    )
 
 
 def run_stage(
@@ -90,4 +105,4 @@ def run_stage(
 
 
 def audit_table(spark: SparkSession, root: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(root, "_audit"))
+    return spark.read.schema(AUDIT_SCHEMA).parquet(os.path.join(root, "_audit"))

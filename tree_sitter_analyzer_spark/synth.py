@@ -25,6 +25,12 @@ salting, SURVEY.md O10) is exercised, not just simulated.
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+from typing import Any
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -121,30 +127,11 @@ def tiles_sql(from_clause: str = "orders", i: str = "o_orderkey") -> str:
     return f"SELECT\n  {i} AS i,\n  {cols}\nFROM {from_clause}"
 
 
-def tiles_df(
-    spark: SparkSession,
-    sf_dir: str,
-    with_bytes: bool = False,
-    amplify: int | None = None,
+def tiles_plan(
+    spark: SparkSession, sf_dir: str, amplify: int = 1, dense: bool = False
 ) -> DataFrame:
-    """Spark-side tiles table from the SAME expressions.
-
-    ``with_bytes=True`` attaches the synthetic raster payload (pandas-UDF
-    generated, see sources/codec.py) for the pixel pipeline; SQL-compared
-    queries never touch ``bytes``.
-
-    ``amplify=k`` (or env SPARK_GRAFT_AMPLIFY) fans each seed row into k
-    distinct tiles (i = o_orderkey·k + rep) — used ONLY by the scaling
-    bench so task compute dominates scheduling overhead; correctness runs
-    always use k=1 (the driver never sets the env).
-    """
-    import os
-
-    if amplify is None:
-        amplify = int(os.environ.get("SPARK_GRAFT_AMPLIFY", "1"))
-    # Stretch-density smoke knob (see tile_exprs): never set by the
-    # driver or any oracle path.
-    dense = os.environ.get("SPARK_GRAFT_DENSE", "") == "1"
+    """The lazy plan ``tiles_df`` materializes: seed read, spread, and the
+    LCG projection of ``tile_exprs``."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     # The seed parquet is one small file → one input split. Real tile data
     # would arrive pre-partitioned; the synthetic table must be spread
@@ -159,13 +146,97 @@ def tiles_df(
         ).select(
             (F.col("o_orderkey") * amplify + F.col("rep")).alias("o_orderkey")
         )
-    df = seed.select(
+    return seed.select(
         F.col("o_orderkey").alias("i"),
         *[
             F.expr(f"{e} AS {n}")
             for n, e in tile_exprs("o_orderkey", dense=dense).items()
         ],
     )
+
+
+# Materialized tiles tables, least recently used first: (application id,
+# real path, st_size, st_mtime_ns, amplify, dense) -> (leaf DataFrame, its
+# persisted JVM RDD).
+TILES_CACHE_SLOTS = 4
+_tiles_cache: OrderedDict[tuple, tuple[DataFrame, Any]] = OrderedDict()
+_tiles_lock = threading.Lock()
+
+
+def _release(entry: tuple[DataFrame, Any]) -> None:
+    entry[1].unpersist(False)
+
+
+def drop_tiles_cache() -> None:
+    """Release every materialized tiles table."""
+    with _tiles_lock:
+        while _tiles_cache:
+            _release(_tiles_cache.popitem()[1])
+
+
+def tiles_df(
+    spark: SparkSession,
+    sf_dir: str,
+    with_bytes: bool = False,
+    amplify: int | None = None,
+) -> DataFrame:
+    """Spark-side tiles table from the SAME expressions, served from one
+    materialization per source snapshot.
+
+    The first call for a snapshot runs ``tiles_plan`` once into locally
+    checkpointed blocks (memory, spilling to disk); every later call gets
+    the same one-leaf DataFrame, so downstream plans neither re-read the
+    seed nor re-analyze the LCG expressions. Only this base table is
+    reused: every query still plans and runs its own joins and
+    aggregates, and no query result is kept.
+
+    A snapshot is the SparkContext plus the real path, size and mtime_ns
+    of ``orders.parquet``; an in-place rewrite that keeps both the size
+    and the mtime_ns is the one change it cannot see (call
+    ``drop_tiles_cache`` after one). The older snapshot of a rewritten
+    file is released when the new one is built, the least recently used
+    entry when a ``TILES_CACHE_SLOTS + 1``-th is. A released leaf cannot
+    be recomputed (its lineage is cut), so take the frame per query
+    rather than holding it across other snapshots' builds.
+
+    ``with_bytes=True`` attaches the synthetic raster payload (pandas-UDF
+    generated, see sources/codec.py) lazily on top of the cached leaf for
+    the pixel pipeline; SQL-compared queries never touch ``bytes``.
+
+    ``amplify=k`` (or env SPARK_GRAFT_AMPLIFY) fans each seed row into k
+    distinct tiles (i = o_orderkey·k + rep) — used ONLY by the scaling
+    bench so task compute dominates scheduling overhead; correctness runs
+    always use k=1 (only the scaling bench sets the env).
+    """
+    if amplify is None:
+        amplify = int(os.environ.get("SPARK_GRAFT_AMPLIFY", "1"))
+    # Stretch-density smoke knob (see tile_exprs): never set by a
+    # correctness run or any oracle path.
+    dense = os.environ.get("SPARK_GRAFT_DENSE", "") == "1"
+    app = spark.sparkContext.applicationId
+    real = os.path.realpath(f"{sf_dir}/orders.parquet")
+    st = os.stat(real)
+    snapshot = (real, st.st_size, st.st_mtime_ns)
+    key = (app, *snapshot, amplify, dense)
+    with _tiles_lock:
+        entry = _tiles_cache.get(key)
+        if entry is None:
+            # entries of a stopped context are gone with it; an older
+            # snapshot of the same file can never be asked for again
+            for k in [k for k in _tiles_cache if k[0] != app]:
+                del _tiles_cache[k]
+            for k in [k for k in _tiles_cache if k[1] == real and k[1:4] != snapshot]:
+                _release(_tiles_cache.pop(k))
+            leaf = tiles_plan(spark, sf_dir, amplify, dense).localCheckpoint(
+                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+            )
+            entry = (leaf, leaf._jdf.queryExecution().analyzed().rdd())
+            _tiles_cache[key] = entry
+            while len(_tiles_cache) > TILES_CACHE_SLOTS:
+                _release(_tiles_cache.popitem(last=False)[1])
+        else:
+            _tiles_cache.move_to_end(key)
+    df = entry[0]
     if with_bytes:
         from .sources.codec import attach_bytes
 
