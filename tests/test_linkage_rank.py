@@ -106,18 +106,35 @@ def test_bm25_saturation_bound(spark):
 # ---------------------------------------------------------------------------
 
 
-def _lev(a: str, b: str) -> int:
+def _lev(a: str, b: str, cap: int = dedup.FUZZY_LEV_MAX) -> int:
+    """Levenshtein distance, exact whenever it is <= cap; any larger
+    distance comes back as cap + 1. Plain DP restricted to the diagonal
+    band |i - j| <= cap (cells outside it are > cap by the length
+    bound) with every cell clamped at cap + 1, and an early exit once a
+    whole row exceeds cap (every alignment path crosses every row)."""
     if len(a) < len(b):
         a, b = b, a
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, start=1):
-        cur = [i]
-        for j, cb in enumerate(b, start=1):
-            cur.append(
-                min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-            )
+    n, m = len(a), len(b)
+    big = cap + 1
+    if n - m > cap:
+        return big
+    prev = [min(j, big) for j in range(m + 1)]
+    for i in range(1, n + 1):
+        lo, hi = max(1, i - cap), min(m, i + cap)
+        cur = [big] * (m + 1)
+        cur[0] = min(i, big)
+        ca = a[i - 1]
+        for j in range(lo, hi + 1):
+            v = prev[j - 1] + (ca != b[j - 1])
+            if prev[j] + 1 < v:
+                v = prev[j] + 1
+            if cur[j - 1] + 1 < v:
+                v = cur[j - 1] + 1
+            cur[j] = v if v < big else big
+        if min(cur[lo - 1:hi + 1]) > cap:
+            return big
         prev = cur
-    return prev[-1]
+    return prev[m]
 
 
 def test_fuzzy_recall_vs_unblocked_brute(spark):

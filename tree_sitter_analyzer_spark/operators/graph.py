@@ -3176,9 +3176,11 @@ def critical_path(parts: DataFrame) -> DataFrame:
 
 
 def critical_path_oracle() -> str:
-    """Chained-CTE replica of the layer relaxations."""
+    """Chained-CTE replica of the layer relaxations. Every round reads
+    the previous one twice, so the CTEs are MATERIALIZED: inlined, the
+    plan would grow as 2^layers copies of the first round."""
     w, L = CP_W, CP_L
-    ctes = [f"""WITH cp_nodes AS (
+    ctes = [f"""WITH cp_nodes AS MATERIALIZED (
   SELECT DISTINCT {_cp_md5_duck('cpn', 'p_partkey')} % {w * L} AS n
   FROM part),
 cp_src AS (SELECT n FROM cp_nodes WHERE n // {w} < {L - 1}),
@@ -3190,13 +3192,13 @@ cp_cand AS (
     SELECT n, ((n // {w}) + 1) * {w}
            + ({_cp_md5_duck('cpb', 'n')} % {w}) FROM cp_src)
   GROUP BY 1, 2),
-cp_edges AS (
+cp_edges AS MATERIALIZED (
   SELECT c.u, c.m,
          1 + ({_cp_md5_duck('cpw', 'c.u', 'c.m')} % 9) AS w
   FROM cp_cand c JOIN cp_nodes t ON t.n = c.m),
-cp_es0 AS (SELECT n, CAST(0 AS BIGINT) AS es FROM cp_nodes)"""]
+cp_es0 AS MATERIALIZED (SELECT n, CAST(0 AS BIGINT) AS es FROM cp_nodes)"""]
     for l in range(1, L):
-        ctes.append(f"""cp_es{l} AS (
+        ctes.append(f"""cp_es{l} AS MATERIALIZED (
   SELECT nd.n,
          CASE WHEN nd.n // {w} = {l}
               THEN coalesce(c.cand, CAST(0 AS BIGINT))
@@ -3208,11 +3210,11 @@ cp_es0 AS (SELECT n, CAST(0 AS BIGINT) AS es FROM cp_nodes)"""]
     FROM cp_edges e JOIN cp_es{l - 1} p ON p.n = e.u
     WHERE e.m // {w} = {l} GROUP BY 1) c ON c.n = nd.n)""")
     ctes.append(
-        f"cp_ls{L - 1} AS (SELECT n, CAST(0 AS BIGINT) AS ls"
+        f"cp_ls{L - 1} AS MATERIALIZED (SELECT n, CAST(0 AS BIGINT) AS ls"
         " FROM cp_nodes)"
     )
     for l in range(L - 2, -1, -1):
-        ctes.append(f"""cp_ls{l} AS (
+        ctes.append(f"""cp_ls{l} AS MATERIALIZED (
   SELECT nd.n,
          CASE WHEN nd.n // {w} = {l}
               THEN coalesce(c.cand, CAST(0 AS BIGINT))
@@ -3225,7 +3227,7 @@ cp_es0 AS (SELECT n, CAST(0 AS BIGINT) AS es FROM cp_nodes)"""]
     WHERE e.u // {w} = {l} GROUP BY 1) c ON c.n = nd.n)""")
     body = ",\n".join(ctes)
     return f"""{body},
-cp_both AS (
+cp_both AS MATERIALIZED (
   SELECT e.n, e.es, s.ls FROM cp_es{L - 1} e
   JOIN cp_ls0 s ON s.n = e.n),
 cp_max AS (SELECT CAST(max(es + ls) AS BIGINT) AS cp FROM cp_both)
@@ -3351,7 +3353,9 @@ def dag_path_census(parts: DataFrame) -> DataFrame:
 
 
 def dag_path_census_oracle() -> str:
-    """Chained-CTE replica of the layer-relaxed path counts."""
+    """Chained-CTE replica of the layer-relaxed path counts. Every round
+    reads the previous one twice, so the CTEs are MATERIALIZED: inlined,
+    the plan would grow as 2^layers copies of the first round."""
     w, L = CP_W, CP_L
     ctes = [f"""WITH dp_nodes AS (
   SELECT DISTINCT {_cp_md5_duck('cpn', 'p_partkey')} % {w * L} AS n
@@ -3365,9 +3369,9 @@ dp_cand AS (
     SELECT n, ((n // {w}) + 1) * {w}
            + ({_cp_md5_duck('cpb', 'n')} % {w}) FROM dp_src)
   GROUP BY 1, 2),
-dp_edges AS (
+dp_edges AS MATERIALIZED (
   SELECT c.u, c.m FROM dp_cand c JOIN dp_nodes t ON t.n = c.m),
-dp_base AS (
+dp_base AS MATERIALIZED (
   SELECT nd.n,
          coalesce(i.ind, CAST(0 AS BIGINT)) AS ind,
          coalesce(o.outd, CAST(0 AS BIGINT)) AS outd
@@ -3376,13 +3380,13 @@ dp_base AS (
              FROM dp_edges GROUP BY 1) i ON i.m = nd.n
   LEFT JOIN (SELECT u, CAST(count(*) AS BIGINT) AS outd
              FROM dp_edges GROUP BY 1) o ON o.u = nd.n),
-dp_f0 AS (
+dp_f0 AS MATERIALIZED (
   SELECT n, ind, outd,
          CASE WHEN ind = 0 THEN CAST(1 AS BIGINT)
               ELSE CAST(0 AS BIGINT) END AS f
   FROM dp_base)"""]
     for l in range(1, L):
-        ctes.append(f"""dp_f{l} AS (
+        ctes.append(f"""dp_f{l} AS MATERIALIZED (
   SELECT p.n, p.ind, p.outd,
          CASE WHEN p.n // {w} = {l} AND p.ind > 0
               THEN coalesce(c.cand, CAST(0 AS BIGINT))
@@ -3392,12 +3396,12 @@ dp_f0 AS (
     SELECT e.m AS n, CAST(sum(p.f) AS BIGINT) AS cand
     FROM dp_edges e JOIN dp_f{l - 1} p ON p.n = e.u
     WHERE e.m // {w} = {l} GROUP BY 1) c ON c.n = p.n)""")
-    ctes.append(f"""dp_b{L - 1} AS (
+    ctes.append(f"""dp_b{L - 1} AS MATERIALIZED (
   SELECT n, CASE WHEN outd = 0 THEN CAST(1 AS BIGINT)
                  ELSE CAST(0 AS BIGINT) END AS b
   FROM dp_base)""")
     for l in range(L - 2, -1, -1):
-        ctes.append(f"""dp_b{l} AS (
+        ctes.append(f"""dp_b{l} AS MATERIALIZED (
   SELECT p.n,
          CASE WHEN p.n // {w} = {l} AND c.cand IS NOT NULL
               THEN c.cand
