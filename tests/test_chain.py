@@ -116,7 +116,7 @@ def test_chain_build_runs_no_jobs(spark):
     assert len(tracker.getJobIdsForGroup("lazy-force")) > 0
     assert env["stats"]["returned"] == min(5, env["stats"]["total_matches"])
     # The kNN force is cached on the chain: a second terminal returns the
-    # same envelope without re-running the ring expansion.
+    # same envelope without re-running the kNN.
     assert chain.answer()["results"] == env["results"]
 
 

@@ -68,34 +68,45 @@ def test_cell_exprs_are_codegen(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def _plan_nodes(node, ancestors=()):
+    """(node, ancestor node names) over a JVM physical plan tree."""
+    yield node, ancestors
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i), ancestors + (node.nodeName(),))
+
+
 def test_knn_has_no_cartesian(spark):
-    """Ring-expansion kNN must never fall back to a cartesian product on
-    the normal path (the fallback brute tail only fires for degenerate
-    stragglers, which this data has none of)."""
-    out = knn.knn_join(
-        synth.tiles_df(spark, SF_TINY), synth.qpoints_df(spark), k=5
-    )
-    # knn_join materializes eagerly (localCheckpoint); assert on the ops
-    # it executed via the final lineage-cut result instead: re-run the
-    # candidate phase symbolically.
-    from pyspark.sql import functions as F
-
-    from tree_sitter_analyzer_spark import grid
-    from tree_sitter_analyzer_spark.operators.pip_join import tile_cells
-
-    t = tile_cells(synth.tiles_df(spark, SF_TINY), 7)
-    q = synth.qpoints_df(spark).select(
-        "query_id", "qlon", "qlat",
-        grid.ix_col("qlon", 7).alias("qix"), grid.iy_col("qlat", 7).alias("qiy"),
-    )
-    qcells = q.withColumn("off", F.explode(grid.disk_offsets_expr(1))).withColumn(
-        "cell", F.expr(grid.cell_from_ixiy_sql("qix + off.dx", "qiy + off.dy", 7))
-    )
-    cand = t.join(F.broadcast(qcells), "cell")
-    plan = plan_of(cand)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert out.count() == 250  # and the operator itself works
+    """kNN is one static plan with no cartesian product: every join is a
+    broadcast hash join whose build side is the query side, the tile
+    side is probed map-side, and the only shuffles are partial
+    aggregates and the partially limited candidate top-k."""
+    tiles, q = synth.tiles_df(spark, SF_TINY), synth.qpoints_df(spark)
+    df = knn.knn_plan(tiles, q, k=5)
+    plan = plan_of(df)
+    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin",
+                "SortMergeJoin", "ShuffledHashJoin"):
+        assert bad not in plan
+    nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan().initialPlan()))
+    joins = [n for n, _ in nodes if n.nodeName() == "BroadcastHashJoin"]
+    assert len(joins) == 3
+    assert all(j.buildSide().toString() == "BuildRight" for j in joins)
+    # query side broadcast: the query points only feed broadcasts
+    ranges = [a for n, a in nodes if n.nodeName() == "Range"]
+    assert ranges and all("BroadcastExchange" in a for a in ranges)
+    # tile side probed map-side: the fetch join streams the tile scan
+    # with no exchange in between
+    probes = [a[len(a) - a[::-1].index("BroadcastHashJoin"):] for n, a in nodes
+              if n.nodeName() == "Scan ExistingRDD"]
+    assert any("Exchange" not in a for a in probes)
+    # shuffles: the pyramid and the level sums (partial aggregates) and
+    # the top-k (partial window group limit)
+    below = [n.child() for n, _ in nodes if n.nodeName() == "Exchange"]
+    assert len(below) == 3
+    for n in below:
+        assert (n.nodeName() == "HashAggregate" and "partial_" in n.toString()) or (
+            n.nodeName() == "WindowGroupLimit" and "Partial" in n.toString())
+    assert knn.knn_join(tiles, q, k=5).count() == 250
 
 
 @pytest.mark.parametrize("qname", ["zonal_stats", "tile_manifest"])

@@ -43,9 +43,12 @@ def test_iceberg_snapshot_and_changelog_golden():
         "path": "prod.vision.tiles",
         "start-snapshot-id": "4242",
     }
-    assert fmt.audit_append_sql("tiles", "metrics_v") == (
-        "INSERT INTO prod.vision.tiles_audit SELECT * FROM metrics_v"
+    assert fmt.audit_overwrite_sql("tiles", "s1", "metrics_v") == (
+        "INSERT OVERWRITE prod.vision.tiles_audit PARTITION (stage = 's1') "
+        "SELECT _pid, rows, committed_at FROM metrics_v"
     )
+    assert "PARTITION (stage = 'it''s')" in fmt.audit_overwrite_sql(
+        "tiles", "it's", "metrics_v")
 
 
 def test_iceberg_execute_refuses_in_sandbox():

@@ -3,7 +3,7 @@
 A from-scratch re-expression of the query/data-processing capabilities of
 ``aimasteracc/tree-sitter-analyzer`` (see SURVEY.md) as an idiomatic Spark
 engine over an image+caption tiles table: grid-cell indexing (H3/S2 analog),
-two-phase point-in-polygon joins, ring-expansion kNN, zonal statistics,
+two-phase point-in-polygon joins, two-phase kNN, zonal statistics,
 dedup/similarity/text pipelines, and checkpointed incremental jobs.
 """
 

@@ -25,7 +25,7 @@ Scheme
 - ``grid_disk(k)``: Chebyshev disk — all cells with |dx|,|dy| ≤ k. A point
   at euclidean distance d from a query is at most ``ceil(d/size)`` cells
   away on each axis, so disk k is guaranteed to contain every point within
-  euclidean distance ``(k-1)*size`` — the kNN ring-expansion bound.
+  euclidean distance ``(k-1)*size`` — the radius-join cover bound.
 """
 
 from __future__ import annotations

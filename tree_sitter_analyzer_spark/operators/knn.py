@@ -1,41 +1,57 @@
-"""Grid-bucketed kNN join via cell ring expansion — no cross join, ever.
+"""Exact grid-bucketed kNN join in one static two-phase plan — no cross
+join on the normal path, no driver loop.
 
-Re-expresses the reference's cascade search (``_ast_cache_search.py:23-98``:
-exact → FTS → LIKE → fuzzy tiers, each tier only filling the remaining
-budget) and its BFS frontier loop (``edge_store.py:592-631``) as an
-iterative cell-disk expansion (SURVEY.md J6/T2):
+Filter with an approximation, then refine exactly (the count-sketch
+filter of *Raster Intervals*, SIGMOD 2023; the reference's over-fetch +
+exact re-rank + truncate contract, ``_ast_cache_query.py:155-267``,
+SURVEY.md T1/O5):
 
-    round r: candidates = tiles in the Chebyshev disk of radius r around
-    each unfinished query's cell; a query finishes when ≥k candidates lie
-    within euclidean distance r·s (s = cell size). Doubling r each round
-    bounds the loop at O(log(domain/s)) Spark jobs.
+- **Count phase.** A cell-count pyramid of the tiles: counts per
+  ``(j, ix >> j, iy >> j)`` for levels j = 0..J, J = min(log2
+  ``max_radius``, ``res``), where (ix, iy) is the res-``res`` grid cell.
+  Each query sums the 3×3 level-j block around its own level-j cell and
+  takes j*, the smallest level whose block holds at least k tiles. The
+  block count is monotone in j (the level-(j+1) block contains the
+  level-j block), so j* is one static CASE over the per-level sums.
+- **Fetch phase.** Candidates are the tiles of the 7×7 level-j* block
+  with ``dist2 <= 9·s²``, s = the level-j* cell size; the exact
+  ``(dist2, image_id)`` ``row_number`` keeps the top k.
 
-Exactness: for a query in cell (qix, qiy), any point OUTSIDE disk r is
-> r·s away, and any point WITHIN r·s is inside the disk. So once ≥k
-candidates sit within r·s, the top-k among { candidates with dist ≤ r·s }
-is the global top-k. Over-fetch → exact re-rank → row_number ≤ k is the
-reference's BM25 over-fetch + re-rank + truncate contract
-(``_ast_cache_query.py:155-267``, SURVEY.md T1/O5).
+Exactness: the query lies in its cell [cx, cx+1)·s, so every tile of
+the 3×3 block is less than 2s away on each axis, i.e. within 2√2·s.
+The block holds ≥ k tiles, so the k-th nearest distance d_k < 2√2·s
+< 3s. A tile within d_k of the query is then less than 3s away on each
+axis and lies in cells cx-3..cx+3: the 7×7 block holds every tile at
+distance ≤ d_k, and so do the survivors of ``dist2 <= 9·s²`` (d_k² <
+8s²). Ties at the k-th distance are all fetched, so the
+``(dist2, image_id)`` ranking equals the naive oracle's. The grid
+arithmetic rounds by ~1e-14 degrees, far inside the 2√2 → 3 margin; the
+ranking itself uses the oracle's distance text (``DIST2_SQL``).
+
+Degenerate queries (no level reaches k: k above the tile count, or a
+query farther than the level-J block from k tiles) get j* = -1, a
+sentinel level: every tile also carries one row at level -1 in cell
+(0, 0), so the same equi-join hands those queries every tile, exactly —
+no driver-side emptiness probe.
 
 Scale design (10^12 tiles, modest query set):
-- The query side (disk cells) is broadcast; the tile table is probed
-  map-side — no shuffle of the big side. With a *massive* query set the
-  same loop degrades gracefully to a shuffled equi-join on ``cell``.
-- Per round, only unfinished queries re-expand (left_anti on finished),
-  so dense regions finish in round 1 and sparse stragglers alone pay for
-  wide disks — the reference's early-exit tier semantics.
-- Loop control is DataFrame-side: done/remaining are filtered by
-  semi/anti joins, never collect()ed into driver dicts or IN-lists, so
-  the round bookkeeping itself scales to massive query sets.
-- ``row_number`` windows partition by query_id: parallelism = #queries,
-  never a global sort.
+- The query side (3×3 blocks of every level, then the 7×7 fetch block)
+  is broadcast; the tile side is probed map-side. Nothing per query is
+  collected to the driver.
+- The only shuffles are partial aggregates — the pyramid is O(non-empty
+  cells), the per-query level sums O(#queries) — and the candidate
+  top-k, which Spark's window group limit prunes to ≤ k rows per query
+  per partition before the exchange.
+- The pyramid is query-independent but rebuilt per call; it could be
+  materialized once per tiles snapshot.
+- One SQL statement: a chain of DataFrame calls would pay ~10 ms of
+  analysis per call on the serving path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .. import grid
 from .pip_join import tile_cells
@@ -50,6 +66,95 @@ DIST2_ORACLE_SQL = (
 )
 
 
+def _knn_sql(k: int, res: int, levels: int) -> str:
+    """The two-phase plan over views ``{tiles}`` and ``{qpoints}``
+    (placeholders filled by ``spark.sql``'s DataFrame arguments)."""
+    top = levels - 1
+    sums = ",\n         ".join(
+        f"sum(CASE WHEN b.j = {j} THEN p.n END) AS n{j}" for j in range(levels)
+    )
+    jstar = " ".join(f"WHEN l.n{j} >= {k} THEN {j}" for j in range(levels))
+    # level-j* cell edge in degrees: 2^j* / 2^res, exact in doubles
+    cell = f"(CAST(shiftleft(1L, jstar) AS DOUBLE) / {1 << res}.0D)"
+    return f"""
+WITH t AS (
+  SELECT image_id, lon, lat,
+         {grid.ix_sql("lon", res)} AS ix, {grid.iy_sql("lat", res)} AS iy
+  FROM {{tiles}}
+),
+q AS (
+  SELECT query_id, qlon, qlat,
+         {grid.ix_sql("qlon", res)} AS qix, {grid.iy_sql("qlat", res)} AS qiy
+  FROM {{qpoints}}
+),
+pyramid AS (
+  SELECT j, shiftright(ix, j) AS cx, shiftright(iy, j) AS cy, count(*) AS n
+  FROM t LATERAL VIEW explode(sequence(0, {top})) AS j
+  GROUP BY 1, 2, 3
+),
+qblock AS (
+  SELECT query_id, j, shiftright(qix, j) + dx AS cx, shiftright(qiy, j) + dy AS cy
+  FROM q LATERAL VIEW explode(sequence(0, {top})) AS j
+         LATERAL VIEW explode(sequence(-1, 1)) AS dx
+         LATERAL VIEW explode(sequence(-1, 1)) AS dy
+),
+level AS (
+  SELECT /*+ BROADCAST(b) */ b.query_id,
+         {sums}
+  FROM pyramid p JOIN qblock b ON p.j = b.j AND p.cx = b.cx AND p.cy = b.cy
+  GROUP BY b.query_id
+),
+qstar AS (
+  SELECT /*+ BROADCAST(l) */ q.query_id, q.qlon, q.qlat, q.qix, q.qiy,
+         CASE {jstar} ELSE -1 END AS jstar
+  FROM q LEFT JOIN level l ON q.query_id = l.query_id
+),
+qfetch AS (
+  SELECT query_id, qlon, qlat, jstar,
+         CASE WHEN jstar < 0 THEN 0 ELSE shiftright(qix, jstar) + dx END AS cx,
+         CASE WHEN jstar < 0 THEN 0 ELSE shiftright(qiy, jstar) + dy END AS cy,
+         9.0D * {cell} * {cell} AS bound2
+  FROM qstar
+    LATERAL VIEW explode(IF(jstar < 0, array(0), sequence(-3, 3))) AS dx
+    LATERAL VIEW explode(IF(jstar < 0, array(0), sequence(-3, 3))) AS dy
+),
+tl AS (
+  SELECT image_id, lon, lat, j,
+         IF(j < 0, 0L, shiftright(ix, j)) AS cx, IF(j < 0, 0L, shiftright(iy, j)) AS cy
+  FROM t LATERAL VIEW explode(sequence(-1, {top})) AS j
+),
+cand AS (
+  SELECT /*+ BROADCAST(f) */ f.query_id, tl.image_id, f.jstar, f.bound2,
+         {DIST2_SQL} AS dist2
+  FROM tl JOIN qfetch f ON tl.j = f.jstar AND tl.cx = f.cx AND tl.cy = f.cy
+)
+SELECT query_id, CAST(rank AS BIGINT) AS rank, image_id,
+       CAST(floor(dist2 * 1e12) AS BIGINT) AS dist2_nano
+FROM (
+  SELECT query_id, image_id, dist2,
+         row_number() OVER (PARTITION BY query_id ORDER BY dist2, image_id) AS rank
+  FROM cand WHERE jstar < 0 OR dist2 <= bound2
+)
+WHERE rank <= {k}
+"""
+
+
+def knn_plan(
+    tiles: DataFrame,
+    qpoints: DataFrame,
+    k: int = 5,
+    res: int = DEFAULT_KNN_RES,
+    max_radius: int = 64,
+) -> DataFrame:
+    """The lazy plan ``knn_join`` materializes (same arguments)."""
+    if max_radius < 1:
+        raise ValueError(f"max_radius must be >= 1, got {max_radius}")
+    levels = min(max_radius.bit_length() - 1, res) + 1
+    return qpoints.sparkSession.sql(
+        _knn_sql(k, res, levels), tiles=tiles, qpoints=qpoints
+    )
+
+
 def knn_join(
     tiles: DataFrame,
     qpoints: DataFrame,
@@ -62,186 +167,13 @@ def knn_join(
     Returns (query_id, rank, image_id, dist2_nano) with deterministic
     (dist2, image_id) tie-breaking; ``dist2_nano = floor(dist2 * 1e12)``
     keeps the compared output integer-typed (cross-engine hash safety).
+    ``max_radius`` (in res-``res`` cells) sizes the pyramid: levels
+    0..min(log2 max_radius, res); queries beyond its top block fall back
+    to every tile.
     """
-    s = grid.cell_size(res)
-    t = tile_cells(tiles, res).select(
-        "image_id",
-        "lon",
-        "lat",
-        "cell",
-        grid.ix_col("lon", res).alias("ix"),
-        grid.iy_col("lat", res).alias("iy"),
-    )
-    # NOT persisted: the common case finishes in round 1, where the tile
-    # side is scanned exactly once (into the cached candidate set) — a
-    # cache materialization would cost one extra full pass. Multi-round
-    # stragglers rescan, but they carry tiny disk fan-outs.
-
-    q = qpoints.select(
-        "query_id",
-        "qlon",
-        "qlat",
-        grid.ix_col("qlon", res).alias("qix"),
-        grid.iy_col("qlat", res).alias("qiy"),
-    )
-
-    results: list[DataFrame] = []
-    win = Window.partitionBy("query_id").orderBy("dist2", "image_id")
-    # Round state is localCheckpoint'ed, NOT persist()ed (round-5): the
-    # persist-based loop re-derived each round's frames through the full
-    # prior-round lineage, and the plan-equality cache lookup missed —
-    # the dense-smoke run re-executed every earlier round per action
-    # (98 s; checkpointed loop: 8.5 s, identical output). Checkpoints
-    # truncate lineage outright, so recompute is impossible by
-    # construction — the same discipline as the graph loops.
-    remaining = q.localCheckpoint(eager=True)
-    r = 1
-    while r <= max_radius:
-        # Hierarchical ring ladder (round-5): round 1 probes the 3×3
-        # fine-cell disk as before; every later round r = 2^j probes a
-        # FIXED 5×5 disk at the COARSER resolution res-j (coarse index =
-        # fine index DIV 2^j — pure integer arithmetic, no re-floor of
-        # the doubles). Coverage proof is the same cell-gap argument:
-        # outside a radius-R_c disk of cells of size s_j, a point is
-        # > (R_c-1)·s_j away, so R_c = 2 at s_j = r·s yields the exact
-        # same bound ladder (r·s) the flat expansion used — but the
-        # broadcast stays O(25·|remaining|) at EVERY round instead of
-        # O((2r+1)²·|remaining|) (r = 64 previously exploded 16,641
-        # offsets per straggler: a ~33 MB broadcast and the dense-smoke
-        # knn wall). If r outgrows the grid (res-j < 0) the disk radius
-        # widens to 2^(j-res)+1 at res 0 — unreachable with the default
-        # res 7 / max_radius 64.
-        if r == 1:
-            qcells = (
-                remaining.withColumn(
-                    "off", F.explode(grid.disk_offsets_expr(1))
-                )
-                .withColumn(
-                    "cell",
-                    F.expr(grid.cell_from_ixiy_sql(
-                        "qix + off.dx", "qiy + off.dy", res
-                    )),
-                )
-                .drop("off", "qix", "qiy")
-            )
-            tj = t
-        else:
-            if r == 2:
-                # Stragglers exist: pin the tile index once so later
-                # rounds re-probe a materialized RDD instead of
-                # re-running the scan + synth expressions per round.
-                # Lazy — materializes inside round 2's candidate join;
-                # the common all-done-in-round-1 case never pays it.
-                t = t.localCheckpoint(eager=False)
-            j = r.bit_length() - 1
-            j_eff = min(j, res)
-            res_j = res - j_eff
-            rc = (1 << (j - j_eff)) + 1
-            div = 1 << j_eff
-            qcells = (
-                remaining.withColumn(
-                    "off", F.explode(grid.disk_offsets_expr(rc))
-                )
-                .withColumn(
-                    "cell",
-                    F.expr(grid.cell_from_ixiy_sql(
-                        f"(qix DIV {div}) + off.dx",
-                        f"(qiy DIV {div}) + off.dy",
-                        res_j,
-                    )),
-                )
-                .drop("off", "qix", "qiy")
-            )
-            tj = t.withColumn(
-                "cell",
-                F.expr(grid.cell_from_ixiy_sql(
-                    f"(ix DIV {div})", f"(iy DIV {div})", res_j
-                )),
-            )
-        bound2 = (r * s) * (r * s)
-        # One pass over the (cached) tile index per round; candidates are
-        # tiny (disk cells × local density) and are cached so the count,
-        # the re-rank, and the anti-join all reuse one materialization —
-        # the reference's "don't recompute the frontier" BFS discipline.
-        cand = (
-            tj.join(F.broadcast(qcells), "cell")
-            .withColumn("dist2", F.expr(DIST2_SQL))
-            .where(F.col("dist2") <= F.lit(bound2))
-            .localCheckpoint(eager=True)
-        )
-        # Loop control stays DISTRIBUTED: the done/remaining sets are
-        # DataFrames filtered by semi/anti joins, never collected into the
-        # driver (a 10^7-query set would blow up a driver-side dict and
-        # produce giant IN-list plans). The only driver-side values per
-        # round are two scalar emptiness probes on tiny persisted frames.
-        done = (
-            cand.groupBy("query_id")
-            .agg(F.count("*").alias("n"))
-            .where(F.col("n") >= F.lit(k))
-            .select("query_id")
-            .localCheckpoint(eager=True)
-        )
-        if not done.isEmpty():
-            # Two-stage top-k (round-5): a dense cluster can put 10^4-10^6
-            # candidates under ONE query's window — partitionBy(query_id)
-            # then ships and sorts all of them on a single task. Stage 1
-            # takes the per-input-partition top-k first (map-side: no
-            # shuffle moved yet, sorts are partition-local and parallel),
-            # so the per-query shuffle carries at most k rows per input
-            # partition. Exact: every global top-k row is its partition's
-            # top-<=k row, so stage 1's output is a superset.
-            pwin = Window.partitionBy("query_id", "pid").orderBy(
-                "dist2", "image_id"
-            )
-            pruned = (
-                cand.join(done, "query_id", "left_semi")
-                .withColumn("pid", F.spark_partition_id())
-                .withColumn("prank", F.row_number().over(pwin))
-                .where(F.col("prank") <= k)
-            )
-            topk = (
-                pruned.withColumn("rank", F.row_number().over(win))
-                .where(F.col("rank") <= k)
-                .select("query_id", "rank", "image_id", "dist2")
-            )
-            results.append(topk)
-            remaining = remaining.join(done, "query_id", "left_anti") \
-                .localCheckpoint(eager=True)
-            if remaining.isEmpty():
-                remaining = None
-                break
-        r *= 2
-
-    if remaining is not None and not remaining.isEmpty():
-        # Degenerate tail (query farther than max_radius·s from the kth
-        # neighbor — e.g. k > #tiles in the region). Exact fallback for the
-        # stragglers only; the broadcast side is the tiny remainder.
-        tail = (
-            t.crossJoin(F.broadcast(remaining.select("query_id", "qlon", "qlat")))
-            .withColumn("dist2", F.expr(DIST2_SQL))
-            .withColumn("rank", F.row_number().over(win))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", "image_id", "dist2")
-        )
-        results.append(tail)
-
-    from .graph import union_all
-
-    if not results:
-        # Zero query points: return an empty frame with the contract
-        # schema instead of crashing reduce() on an empty list.
-        return qpoints.sparkSession.createDataFrame(
-            [],
-            "query_id bigint, rank bigint, image_id string, dist2_nano bigint",
-        )
-    combined = union_all(results)
-    out = combined.withColumn(
-        "dist2_nano", F.expr("CAST(floor(dist2 * 1e12) AS BIGINT)")
-    ).select("query_id", F.col("rank").cast("bigint").alias("rank"), "image_id", "dist2_nano")
-    # The per-round inputs are checkpointed RDDs, so the combined plan is
-    # shallow; one final materialization keeps downstream consumers from
-    # re-running the round windows.
-    return out.localCheckpoint(eager=True)
+    # One materialization keeps downstream consumers (joins back to tile
+    # rows, self-join renumbering) from re-running the plan.
+    return knn_plan(tiles, qpoints, k, res, max_radius).localCheckpoint(eager=True)
 
 
 def radius_join(
@@ -254,8 +186,8 @@ def radius_join(
     distance-band family): every (query, tile) pair with euclidean
     distance ≤ ``radius``, exact.
 
-    Same two-phase discipline as ``knn_join`` but with a STATIC disk —
-    no iteration: candidates are the tiles in the Chebyshev cell disk of
+    Same two-phase discipline as ``knn_join``'s fetch, with a disk fixed
+    by the radius: candidates are the tiles in the Chebyshev cell disk of
     ``rc = ceil(radius / cell_size)`` around each query's cell (any point
     within euclidean ``radius`` is ≤ rc cells away on each axis, so the
     disk provably covers the ball); one exact ``dist2 ≤ radius²`` verify

@@ -151,7 +151,7 @@ def nn_distance_stats(tiles: DataFrame, sample_mod: int = SAMPLE_MOD) -> DataFra
     above is the cumulative sibling).
 
     A deterministic 1/``sample_mod`` tile sample (i % mod = 0) queries
-    the full tile set for its nearest OTHER tile via the ring-expansion
+    the full tile set for its nearest OTHER tile via the two-phase
     kNN join (k=2 — rank 1 is the query itself at distance 0 unless
     co-located tiles shadow it; excluding the self row by image_id and
     taking the min is exact in every co-location case because floor is

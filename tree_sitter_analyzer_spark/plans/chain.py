@@ -114,8 +114,8 @@ class Chain:
         # The chain's frame, possibly DEFERRED: either a concrete DataFrame
         # or a zero-arg thunk that builds one. Steps compose thunks, so
         # building a chain never executes Spark jobs — even ``near()``,
-        # whose ring-expansion kNN is an iterative driver loop, only runs
-        # when a terminal (``df()``/``answer()``) forces ``_df``. The force
+        # whose kNN materializes its result, only runs when a terminal
+        # (``df()``/``answer()``) forces ``_df``. The force
         # is cached here, so a chain's expensive step runs at most once
         # however many children force it.
         self._frame: Any = df
@@ -269,21 +269,23 @@ class Chain:
                                         how="semi").drop("cell"))
 
     def near(self, lon: float, lat: float, k: int = 10) -> "Chain":
-        """k nearest tiles to a point (ring-expansion kNN), joined back to
-        full tile rows.
+        """k nearest tiles to a point (two-phase kNN, operators/knn.py),
+        joined back to full tile rows.
 
-        The ring expansion is an iterative driver loop (operators/knn.py),
-        so unlike the pure-transformation steps its RESULT cannot be a
-        static Catalyst plan — but the loop is DEFERRED: building a chain
-        with ``near`` (or stacking further steps on it) runs no Spark
-        jobs; the search executes once, at the first terminal that forces
-        the frame (``answer()``/``df()``), and the forced result is cached
-        on this chain object."""
+        kNN materializes its result (an eager local checkpoint), so the
+        step is DEFERRED: building a chain with ``near`` (or stacking
+        further steps on it) runs no Spark jobs; the search executes once,
+        at the first terminal that forces the frame (``answer()``/
+        ``df()``), and the forced result is cached on this chain object."""
         def build() -> DataFrame:
-            q = self._spark.createDataFrame(
-                [(0, float(lon), float(lat))],
-                "query_id BIGINT, qlon DOUBLE, qlat DOUBLE",
-            )
+            # One-row query frame built JVM-side: a frame from a Python
+            # list would start a Python worker to scan it on every call.
+            # The point is table data, not a literal column: literals are
+            # inlined into generated code, so each new point would
+            # compile about 6 fresh classes.
+            q = self._spark.sql(
+                f"SELECT * FROM VALUES (0L, CAST('{float(lon)!r}' AS DOUBLE), "
+                f"CAST('{float(lat)!r}' AS DOUBLE)) AS q(query_id, qlon, qlat)")
             base = self._base()
             hits = knn_ops.knn_join(base, q, k=k).select("image_id", "rank")
             return base.join(hits, "image_id").drop("rank")

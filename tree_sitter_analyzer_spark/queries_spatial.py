@@ -1,7 +1,7 @@
 """Spatial query suite: tiling, PIP, kNN, zonal — each with a DuckDB oracle.
 
 These are the headline capabilities of the north rule. Spark side runs the
-scale-designed operators (two-phase cell join, ring-expansion kNN); the
+scale-designed operators (two-phase cell join, two-phase kNN); the
 oracle runs a naive-but-exact equivalent (range-predicate join, cross-join
 kNN) — correctness is "the clever plan equals the naive plan", the same
 old-path/new-path parity discipline as the reference's
@@ -100,8 +100,9 @@ def q_pip_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "knn",
     _CTES + "\n" + knn.knn_oracle_sql(k=5),
-    doc="Exact k=5 nearest tiles per query point via ring expansion "
-    "(SURVEY.md J6/T1/T2) — oracle is the naive cross join.",
+    doc="Exact k=5 nearest tiles per query point via a cell-count pyramid "
+    "and one exact fetch (SURVEY.md J6/T1/T2) — oracle is the naive "
+    "cross join.",
 )
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _tiles(spark, sf_dir)
@@ -741,7 +742,7 @@ SELECT query_id, rank, image_id, dist2_nano FROM (
   SELECT q.i AS query_id,
          -- raw-double ordering, like the main knn oracle: the raw
          -- expression text is identical on both engines (bit-equal
-         -- doubles), and Spark's ring expansion selects its candidate
+         -- doubles), and Spark's kNN join selects its candidate
          -- set by the same raw order — ranking by the quantized value
          -- here would disagree at nano-tie boundaries.
          row_number() OVER (PARTITION BY q.i
@@ -753,7 +754,7 @@ SELECT query_id, rank, image_id, dist2_nano FROM (
 ) WHERE rank <= 3
 """,
     doc="Spatial kNN SELF-join (J12 similarity-join shape): each sampled "
-    "tile's 3 nearest OTHER tiles via the same ring-expansion machinery "
+    "tile's 3 nearest OTHER tiles via the same two-phase kNN machinery "
     "(over-fetch k+1, drop self, re-rank) — the 'find tiles like this "
     "one, nearby' query.",
 )
@@ -1367,7 +1368,7 @@ def q_bloom_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Nearest-neighbor distance profile per tile kind (Clark-Evans "
     "point-pattern statistic, the aggregate sibling of the Ripley-K "
     "ladder): a deterministic 1/23 tile sample queries the full set for "
-    "its nearest OTHER tile via the ring-expansion kNN join (k=2, self "
+    "its nearest OTHER tile via the two-phase kNN join (k=2, self "
     "excluded by image_id — exact in every co-location case because "
     "floor is monotone and the true NN is always in the candidate set). "
     "No cross join: the big side is probed map-side by broadcast query "

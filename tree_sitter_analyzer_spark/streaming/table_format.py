@@ -82,12 +82,15 @@ class IcebergFormat:
             "start-snapshot-id": str(start_snapshot_id),
         }
 
-    def audit_append_sql(self, table: str, metrics_view: str) -> str:
-        """Per-partition lineage metrics into the Iceberg audit table
-        (checkpoint.write_audit's target on a real cluster)."""
+    def audit_overwrite_sql(self, table: str, stage: str, metrics_view: str) -> str:
+        """Per-partition lineage metrics into the stage's partition of the
+        Iceberg audit table (checkpoint.write_audit's target on a real
+        cluster). A static partition overwrite replaces the stage's rows,
+        so a crash and re-run leaves one set of them, not two."""
+        lit = stage.replace("'", "''")
         return (
-            f"INSERT INTO {self._fq(table)}_audit "
-            f"SELECT * FROM {metrics_view}"
+            f"INSERT OVERWRITE {self._fq(table)}_audit PARTITION (stage = '{lit}') "
+            f"SELECT _pid, rows, committed_at FROM {metrics_view}"
         )
 
     def execute(self, *_args, **_kwargs):
