@@ -83,6 +83,21 @@ def duck_landing(dt: str) -> str:
     return f"?{d}"
 
 
+def landing_violations(
+    name: str, spark_dtypes: list[tuple[str, str]], rel
+) -> list[tuple[str, str, str, str]]:
+    """(name, column, spark, duckdb) for every column whose landing dtype
+    differs between a Spark frame's ``dtypes`` and a bound DuckDB
+    relation — neither side executed. A differing column set is one
+    violation on column ``*``."""
+    stypes = {c: spark_landing(t) for c, t in spark_dtypes}
+    otypes = dict(zip(rel.columns, [duck_landing(t) for t in rel.types]))
+    if set(stypes) != set(otypes):
+        return [(name, "*", f"cols {sorted(stypes)}", f"cols {sorted(otypes)}")]
+    return [(name, c, stypes[c], otypes[c])
+            for c in stypes if stypes[c] != otypes[c]]
+
+
 def audit(sf: str) -> list[tuple[str, str, str, str]]:
     import __spark_entry__ as entry
     from tree_sitter_analyzer_spark.session import get_spark
@@ -98,15 +113,7 @@ def audit(sf: str) -> list[tuple[str, str, str, str]]:
             continue
         sdf = fn(spark, sf)              # plan only — no job runs
         rel = con.sql(oracles[name])     # bind only — no execution
-        stypes = {c: spark_landing(t) for c, t in sdf.dtypes}
-        otypes = dict(zip(rel.columns, [duck_landing(t) for t in rel.types]))
-        if set(stypes) != set(otypes):
-            violations.append((name, "*", f"cols {sorted(stypes)}",
-                               f"cols {sorted(otypes)}"))
-            continue
-        for c in stypes:
-            if stypes[c] != otypes[c]:
-                violations.append((name, c, stypes[c], otypes[c]))
+        violations += landing_violations(name, sdf.dtypes, rel)
     return violations
 
 

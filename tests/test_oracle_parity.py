@@ -13,6 +13,7 @@ import pytest
 from tree_sitter_analyzer_spark.registry import load_all
 
 from .conftest import SF_TINY, assert_frames_match, register_views
+from .oracle_dtype_audit import landing_violations
 
 QUERIES = load_all()
 
@@ -20,13 +21,22 @@ QUERIES = load_all()
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
     q = QUERIES[name]
-    sdf = q.spark_fn(spark, SF_TINY).toPandas()
+    frame = q.spark_fn(spark, SF_TINY)
     if q.oracle is None:
-        assert len(sdf) >= 0  # rows-only check (non-SQL-expressible op)
+        assert len(frame.toPandas()) >= 0  # rows-only check (non-SQL-expressible op)
         return
     register_views(duck, SF_TINY)
-    odf = duck.sql(q.oracle).df()
-    assert_frames_match(sdf, odf, name)
+    rel = duck.sql(q.oracle)
+    # The external gate hashes pandas values WITHOUT dtype coercion, so the
+    # planned Spark dtypes and the bound oracle types must land as the same
+    # pandas dtypes (HUGEINT/DECIMAL never do) — checked before either runs.
+    bad = landing_violations(name, frame.dtypes, rel)
+    assert not bad, (
+        "oracle output dtypes diverge from Spark (value-hash hazard); "
+        "add CASTs in the oracle SQL or registry._ORACLE_CASTS: "
+        + "; ".join(f"{c} spark={s} duckdb={o}" for _, c, s, o in bad)
+    )
+    assert_frames_match(frame.toPandas(), rel.df(), name)
 
 
 def test_vacuous_at_gate_queries_have_signal_somewhere(spark, duck):

@@ -123,12 +123,33 @@ def test_pip_compact_is_broadcast_no_dedup(spark):
     no dedup: broadcast hash join, no sort-merge, no HashAggregate/
     dropDuplicates between the join and the caller (disjoint cover ⇒ one
     match per pair by construction)."""
-    df = pip_join.pip_join_compact(
-        synth.tiles_df(spark, SF_TINY), synth.zones_df(spark), res=9, min_res=7
+    zones = synth.zones_df(spark)
+    cover = pip_join.compact_cover(zones, res=9, min_res=7).join(
+        zones.select("polygon_id", "xmin", "xmax", "ymin", "ymax"), "polygon_id"
+    )
+    df = pip_join.cover_join(
+        synth.tiles_df(spark, SF_TINY), pip_join.cell_chain(9, 7), cover,
+        pip_join.PIP_PREDICATE,
     )
     plan = plan_of(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+@pytest.mark.parametrize("how,join_type", [("semi", "LeftSemi"), ("anti", "LeftAnti")])
+def test_pip_semi_anti_is_one_broadcast_join(spark, how, join_type):
+    """Semi/anti PIP is ONE broadcast left-semi/anti hash join with the
+    exact predicate in its condition: no shuffle, no dedup aggregate, no
+    join back on image_id."""
+    df = pip_join.pip_join(
+        synth.tiles_df(spark, SF_TINY), synth.zones_df(spark), res=9, how=how
+    )
+    names = [n.nodeName() for n, _ in
+             _plan_nodes(df._jdf.queryExecution().executedPlan().initialPlan())]
+    assert "Exchange" not in names and "HashAggregate" not in names, names
+    joins = [ln for ln in plan_of(df, "simple").splitlines() if "Join" in ln]
+    assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], joins
+    assert join_type in joins[0] and "BuildRight" in joins[0], joins
 
 
 def test_zonal_weighted_single_terminal_exchange(spark):

@@ -111,13 +111,15 @@ def test_convex_pip_matches_numpy(spark):
     tile × polygon pair (the full-fidelity miswire audit for polygons)."""
     import pandas as pd
 
-    from tree_sitter_analyzer_spark.operators.pip_join import pip_convex_join
-
     tiles = synth.tiles_df(spark, SF_TINY)
     pz = synth.poly_zones_df(spark)
     got = {
         (r["polygon_id"], r["image_id"])
-        for r in pip_convex_join(tiles, pz, res=9)
+        for r in pip_join.cover_join(
+            tiles, grid.cell_col("lon", "lat", 9),
+            pip_join.poly_cover_scanline(pz, 9),
+            synth.convex_pip_predicate("lon", "lat"),
+        )
         .select("polygon_id", "image_id")
         .collect()
     }
@@ -196,9 +198,12 @@ def test_pip_compact_equals_pip_join(spark):
     tiles = synth.tiles_df(spark, SF_TINY)
     zones = synth.zones_df(spark)
     a = pip_join.pip_join(tiles, zones, res=9).select("image_id", "polygon_id")
-    b = pip_join.pip_join_compact(tiles, zones, res=9, min_res=7).select(
-        "image_id", "polygon_id"
+    cover = pip_join.compact_cover(zones, res=9, min_res=7).join(
+        zones.select("polygon_id", "xmin", "xmax", "ymin", "ymax"), "polygon_id"
     )
+    b = pip_join.cover_join(
+        tiles, pip_join.cell_chain(9, 7), cover, pip_join.PIP_PREDICATE
+    ).select("image_id", "polygon_id")
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 
@@ -236,23 +241,54 @@ def test_zonal_weighted_refpoint_dedup(spark):
 
 
 def test_scanline_cover_tighter_and_complete(spark):
-    """The scanline convex cover is a subset of the bbox cover (tighter),
-    yet the join result is the identical multiset (complete) — and the
-    verify precision strictly improves."""
+    """The scanline polygon cover has strictly fewer cells than the
+    polygons' bounding boxes (tighter), yet holds the cell of every tile
+    exactly inside its polygon (complete)."""
     from pyspark.sql import functions as F
 
     tiles = synth.tiles_df(spark, SF_TINY)
     pz = synth.poly_zones_df(spark)
-    bbox = pip_join.poly_cover(pz, 9).select("polygon_id", "cell")
     scan = pip_join.poly_cover_scanline(pz, 9).select("polygon_id", "cell")
-    assert scan.exceptAll(bbox).count() == 0  # subset
-    assert scan.count() < bbox.count()  # strictly tighter
-    a = pip_join.pip_convex_join(tiles, pz, 9).select("image_id", "polygon_id")
-    b = pip_join.pip_convex_join_scanline(tiles, pz, 9).select(
+    xs = ", ".join(f"x{m}" for m in range(6))
+    ys = ", ".join(f"y{m}" for m in range(6))
+    n_bbox = pz.select(F.sum(
+        (grid.ix_col(f"GREATEST({xs})", 9) - grid.ix_col(f"LEAST({xs})", 9) + 1)
+        * (grid.iy_col(f"GREATEST({ys})", 9) - grid.iy_col(f"LEAST({ys})", 9) + 1)
+    )).first()[0]
+    assert scan.count() < n_bbox
+    inside = (
+        tiles.crossJoin(F.broadcast(pz))
+        .where(F.expr(synth.convex_pip_predicate("lon", "lat")))
+        .select("polygon_id", grid.cell_col("lon", "lat", 9).alias("cell"))
+    )
+    assert inside.count() > 0
+    assert inside.join(scan, ["polygon_id", "cell"], "left_anti").count() == 0
+
+
+@pytest.mark.parametrize("layer", ["hexagons", "stars"])
+def test_poly_cover_join_equals_cross_join(spark, layer):
+    """The scanline polygon cover through cover_join returns exactly the
+    pairs of an exact broadcast cross-join — convex hexagons with the
+    half-plane verify, concave stars with the ray-cast verify."""
+    from pyspark.sql import functions as F
+
+    tiles = synth.tiles_df(spark, SF_TINY)
+    if layer == "hexagons":
+        zones = synth.poly_zones_df(spark)
+        pred = synth.convex_pip_predicate("lon", "lat")
+    else:
+        zones = synth.star_zones_df(spark)
+        pred = synth.raycast_pip_predicate("lon", "lat")
+    got = pip_join.cover_join(
+        tiles, grid.cell_col("lon", "lat", 9), pip_join.poly_cover_scanline(zones, 9),
+        pred,
+    ).select("image_id", "polygon_id")
+    exact = tiles.crossJoin(F.broadcast(zones)).where(F.expr(pred)).select(
         "image_id", "polygon_id"
     )
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    assert exact.count() > 0
+    assert got.exceptAll(exact).count() == 0
+    assert exact.exceptAll(got).count() == 0
 
 
 @given(st.floats(-179.9, 179.9), st.floats(-89.9, 89.9), st.integers(0, 12))

@@ -110,6 +110,23 @@ def test_batched_drive_job_count_is_constant_in_subscribers(spark):
     assert eight == two  # O(1) in subscriber count, not O(n)
 
 
+def test_drive_keeps_callers_job_group(spark):
+    """drive() tags its own jobs "subs-drive" but hands the caller's job
+    group and description back unchanged."""
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller description")
+    try:
+        reg = SubscriptionRegistry()
+        reg.subscribe("s", "fmt=png", [].append)
+        assert reg.drive(_tiles(spark), now=0.0) == [("s", "fmt=png")]
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+    finally:
+        for p in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(p, None)
+
+
 def test_dead_session_cleanup_and_unsubscribe(spark):
     reg = SubscriptionRegistry()
 

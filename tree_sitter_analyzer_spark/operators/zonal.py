@@ -18,7 +18,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import grid
-from .pip_join import pip_join, pip_oracle_join_sql, tile_cells, zone_cover
+from .pip_join import (
+    box_cells, cover_join, pip_join, pip_oracle_join_sql, tile_cells, zone_cover,
+)
 
 
 def zonal_stats(tiles: DataFrame, zones: DataFrame, res: int = 9) -> DataFrame:
@@ -179,25 +181,15 @@ def zonal_weighted(tiles: DataFrame, zones: DataFrame, res: int = 9) -> DataFram
     point method — pure arithmetic, each pair survives in exactly one
     cell). The terminal groupBy is the job's only exchange.
     """
-    from .pip_join import zone_cover
-
-    t = tile_footprints(tiles)
-    t = (
-        t.withColumn(
-            "ix", F.explode(F.sequence(grid.ix_col("fx_min", res), grid.ix_col("fx_max", res)))
-        )
-        .withColumn(
-            "iy", F.explode(F.sequence(grid.iy_col("fy_min", res), grid.iy_col("fy_max", res)))
-        )
-        .withColumn("cell", F.expr(grid.cell_from_ixiy_sql("ix", "iy", res)))
+    t = box_cells(
+        tile_footprints(tiles), grid.ix_col("fx_min", res), grid.ix_col("fx_max", res),
+        grid.iy_col("fy_min", res), grid.iy_col("fy_max", res), res,
     )
     refpoint = grid.cell_sql("GREATEST(xmin, fx_min)", "GREATEST(ymin, fy_min)", res)
-    j = (
-        t.join(F.broadcast(zone_cover(zones, res)), "cell")
-        .where(F.expr(FP_OVERLAP_PREDICATE))
-        .where(F.expr(f"cell = {refpoint}"))
-        .withColumn("weight_micro", F.expr(WEIGHT_MICRO_SQL))
-    )
+    j = cover_join(
+        t, F.col("cell"), zone_cover(zones, res),
+        f"{FP_OVERLAP_PREDICATE} AND cell = {refpoint}",
+    ).withColumn("weight_micro", F.expr(WEIGHT_MICRO_SQL))
     return j.groupBy("polygon_id", "zkind").agg(
         F.count("*").alias("n_tiles"),
         F.sum("weight_micro").cast("bigint").alias("sum_weight_micro"),

@@ -265,8 +265,9 @@ class Chain:
         combinator `~`, hyphae/parser.py)."""
         zb = self._zone_frame(zones, zone_filter)
         return self._next(
-            lambda: pip_ops.fringe_join(self._base(), zb(),
-                                        how="semi").drop("cell"))
+            lambda: pip_ops.cover_join(
+                self._base(), grid.cell_col("lon", "lat", pip_ops.FRINGE_RES),
+                pip_ops.zone_fringe_cells(zb()), how="semi"))
 
     def near(self, lon: float, lat: float, k: int = 10) -> "Chain":
         """k nearest tiles to a point (two-phase kNN, operators/knn.py),

@@ -430,16 +430,17 @@ pz AS ({synth.poly_zones_sql()})
 SELECT z.polygon_id, t.image_id, t.tile_kind
 FROM tiles t JOIN pz z ON {synth.convex_pip_predicate('t.lon', 't.lat')}
 """,
-    doc="Point-in-CONVEX-POLYGON join (hexagon zones): bbox-cell candidate "
-    "phase + exact half-plane verify — the north rule's polygon layer "
+    doc="Point-in-CONVEX-POLYGON join (hexagon zones): scanline-cover "
+    "candidate phase + exact half-plane verify — the north rule's polygon layer "
     "beyond rectangles, still UDF-free and oracle-checkable.",
 )
 def q_pip_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _tiles(spark, sf_dir)
     pz = synth.poly_zones_df(spark)
-    return pip_join.pip_convex_join_scanline(t, pz, res=9).select(
-        "polygon_id", "image_id", "tile_kind"
-    )
+    return pip_join.cover_join(
+        t, grid.cell_col("lon", "lat", 9), pip_join.poly_cover_scanline(pz, 9),
+        synth.convex_pip_predicate("lon", "lat"),
+    ).select("polygon_id", "image_id", "tile_kind")
 
 
 def _fringe_oracle(res: int = 8) -> str:
@@ -471,7 +472,9 @@ GROUP BY z.polygon_id, z.zkind
 def q_zone_fringe(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _tiles(spark, sf_dir)
     z = synth.zones_df(spark)
-    joined = pip_join.fringe_join(t, z, res=8)
+    joined = pip_join.cover_join(
+        t, grid.cell_col("lon", "lat", 8), pip_join.zone_fringe_cells(z, 8)
+    )
     return joined.groupBy("polygon_id", "zkind").agg(
         F.count("*").alias("n_fringe_tiles"),
         F.countDistinct("cell").alias("n_fringe_cells"),
@@ -486,7 +489,7 @@ SELECT z.polygon_id, t.image_id, t.tile_kind
 FROM tiles t JOIN sz z ON {synth.raycast_pip_predicate('t.lon', 't.lat')}
 """,
     doc="Point-in-ARBITRARY-POLYGON join (concave 8-point star zones): "
-    "bbox-cell candidate phase + exact even-odd RAY-CAST verify "
+    "scanline-cover candidate phase + exact even-odd RAY-CAST verify "
     "(division-free multiply/compare — bit-identical across engines). "
     "The star's reflex notches make the convex half-plane test wrong by "
     "construction, so this query specifically exercises the general "
@@ -495,9 +498,10 @@ FROM tiles t JOIN sz z ON {synth.raycast_pip_predicate('t.lon', 't.lat')}
 def q_pip_concave(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _tiles(spark, sf_dir)
     sz = synth.star_zones_df(spark)
-    return pip_join.pip_concave_join(t, sz, res=9).select(
-        "polygon_id", "image_id", "tile_kind"
-    )
+    return pip_join.cover_join(
+        t, grid.cell_col("lon", "lat", 9), pip_join.poly_cover_scanline(sz, 9),
+        synth.raycast_pip_predicate("lon", "lat"),
+    ).select("polygon_id", "image_id", "tile_kind")
 
 
 # --- S7: budgeted batch read (byte cap via running-sum window) ---------------------
@@ -563,9 +567,13 @@ FROM {pip_join.pip_oracle_join_sql()}
 def q_pip_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _tiles(spark, sf_dir)
     z = synth.zones_df(spark)
-    return pip_join.pip_join_compact(t, z, res=9, min_res=7).select(
-        "polygon_id", "image_id", "zkind", "tile_kind", "caption"
+    cover = pip_join.compact_cover(z, res=9, min_res=7).join(
+        z.select("polygon_id", "zkind", "xmin", "xmax", "ymin", "ymax"),
+        "polygon_id",
     )
+    return pip_join.cover_join(
+        t, pip_join.cell_chain(9, 7), cover, pip_join.PIP_PREDICATE
+    ).select("polygon_id", "image_id", "zkind", "tile_kind", "caption")
 
 
 @register(
@@ -1117,7 +1125,10 @@ def q_zone_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _tiles(spark, sf_dir)
     pz = synth.poly_zones_df(spark)
     cnt = (
-        pip_join.pip_convex_join_scanline(t, pz, res=9)
+        pip_join.cover_join(
+            t, grid.cell_col("lon", "lat", 9), pip_join.poly_cover_scanline(pz, 9),
+            synth.convex_pip_predicate("lon", "lat"),
+        )
         .groupBy("polygon_id")
         .agg(F.count("*").alias("n_tiles"))
     )

@@ -31,6 +31,11 @@ from pyspark.sql import DataFrame
 from ..plans.chain import Chain
 from ..plans.selector import apply_selector
 
+# The local properties SparkContext.setJobGroup writes.
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+)
+
 
 class DeadSession(Exception):
     """Raised by a push callback when its subscriber is gone."""
@@ -141,6 +146,9 @@ class SubscriptionRegistry:
         from pyspark.sql.window import Window
 
         sc = table.sparkSession.sparkContext
+        # setJobGroup overwrites the caller's group and description; put
+        # them back afterwards (None removes a property that was unset).
+        saved = {p: sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS}
         sc.setJobGroup("subs-drive", "batched subscription evaluation")
         table.persist()
         try:
@@ -245,7 +253,8 @@ class SubscriptionRegistry:
             }
         finally:
             table.unpersist()
-            sc.setJobGroup("", "")
+            for p, v in saved.items():
+                sc.setLocalProperty(p, v)
 
     def drive(self, table: DataFrame, now: float = 0.0) -> list[tuple[str, str]]:
         """Re-evaluate every due subscription against the current snapshot
