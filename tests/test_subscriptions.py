@@ -4,9 +4,12 @@ coalescing, dead-session cleanup, foreachBatch integration."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tree_sitter_analyzer_spark import synth
+from tree_sitter_analyzer_spark.plans.chain import Chain
+from tree_sitter_analyzer_spark.plans.selector import apply_selector
 from tree_sitter_analyzer_spark.streaming.subscriptions import (
     DeadSession,
     SubscriptionRegistry,
@@ -91,8 +94,10 @@ def test_failed_push_redelivers_and_empty_first_eval_is_silent(spark):
 
 def test_batched_drive_job_count_is_constant_in_subscribers(spark):
     """VERDICT r2 #7: drive() evaluates ALL subscribers against one shared
-    cached snapshot in O(1) Spark jobs — the job count must NOT grow with
-    the subscriber count (the r2 serial loop ran 2 jobs per subscriber)."""
+    cached snapshot in two batched actions. For these filter+take
+    subscribers the job count does not grow from 2 to 8 subscribers (the
+    r2 serial loop ran 2 jobs per subscriber); sorted and :within
+    subscribers do add jobs per subscriber."""
 
     def jobs_for_one_drive(n_subs: int) -> int:
         reg = SubscriptionRegistry()
@@ -108,6 +113,65 @@ def test_batched_drive_job_count_is_constant_in_subscribers(spark):
     two, eight = jobs_for_one_drive(2), jobs_for_one_drive(8)
     assert two >= 1  # the batched path actually ran (job group tagged)
     assert eight == two  # O(1) in subscriber count, not O(n)
+
+
+def test_batch_failure_isolates_the_poisoned_subscriber(spark, monkeypatch):
+    """A runtime failure of the batched evaluation re-runs each plan
+    alone: healthy subscribers still get their deltas, the poisoned one
+    records its error, gets no push, and is evaluated again next drive."""
+    real = SubscriptionRegistry._eval_batch
+    poisoned = {"fmt=jpeg take 5"}
+    seen: list[list[str]] = []
+
+    def flaky(table, plans):
+        selectors = [sub.selector for sub, _plan in plans]
+        seen.append(selectors)
+        if len(plans) > 1 or poisoned & set(selectors):
+            raise RuntimeError("poisoned plan")
+        return real(table, plans)
+
+    monkeypatch.setattr(SubscriptionRegistry, "_eval_batch", staticmethod(flaky))
+    reg = SubscriptionRegistry()
+    got: dict[str, list] = {"png": [], "jpeg": [], "kind": []}
+    reg.subscribe("a", "fmt=png take 5", got["png"].append)
+    reg.subscribe("b", "fmt=jpeg take 5", got["jpeg"].append)
+    reg.subscribe("c", "kind=aerial take 5", got["kind"].append)
+    tiles = _tiles(spark)
+
+    pushed = reg.drive(tiles, now=0.0)
+    assert set(pushed) == {("a", "fmt=png take 5"), ("c", "kind=aerial take 5")}
+    assert len(got["png"][0]["added"]) == 5 and len(got["kind"][0]["added"]) == 5
+    bad = reg._subs[("b", "fmt=jpeg take 5")]
+    assert bad.last_error == "poisoned plan"
+    assert got["jpeg"] == [] and bad.last_keys is None
+
+    poisoned.clear()
+    seen.clear()
+    assert reg.drive(tiles, now=1.0) == [("b", "fmt=jpeg take 5")]
+    assert "fmt=jpeg take 5" in seen[0]
+    assert bad.last_error is None and len(got["jpeg"][0]["added"]) == 5
+
+
+@pytest.mark.parametrize("selector", [
+    "fmt=png",
+    "kind=aerial :within(park) take 17",
+    "fmt=jpeg sort phash desc take 9",
+    "take 30 fmt=png",
+    "kind=urban :not(fmt=png) take 11",
+    "fmt=png :first-per(cell) take 25",
+    "fmt=png sort w take 7",
+])
+def test_drive_matches_chain_answer(spark, selector):
+    """A standing query pushes exactly what an ad-hoc answer() returns
+    for the same selector: the same capped keys, the same true total."""
+    tiles = _tiles(spark)
+    want = apply_selector(Chain(spark, tiles), selector).answer()
+    reg = SubscriptionRegistry()
+    got: list = []
+    reg.subscribe("s", selector, got.append)
+    assert reg.drive(tiles, now=0.0) == [("s", selector)]
+    assert got[0]["added"] == sorted(str(r["image_id"]) for r in want["results"])
+    assert got[0]["total_matches"] == want["stats"]["total_matches"]
 
 
 def test_drive_keeps_callers_job_group(spark):

@@ -135,14 +135,6 @@ class Chain:
         self._sort_cols: list[tuple[str, bool]] | None = None
         # Facets requested via include(); evaluated at answer() time.
         self._facets: tuple[str, ...] = ()
-        # Pure-filter provenance: the list of filter(**kwargs) specs applied
-        # so far when the chain is NOTHING BUT conjunctive filters (+ a
-        # trailing take) over its base frame; None once any other step
-        # (join, search, sort, window, eager fold) rebuilds the plan. A
-        # batch evaluator (streaming/subscriptions.py) uses this to fuse
-        # many such chains into ONE shared scan instead of a union branch
-        # per chain.
-        self._pure_filters: list[dict] | None = []
 
     @property
     def _df(self) -> DataFrame:
@@ -180,7 +172,7 @@ class Chain:
 
     def _filter_preds(self, kwargs: dict) -> list:
         """The filter grammar as standalone Column predicates (shared by
-        ``filter()`` and the batched multi-chain evaluator)."""
+        ``filter()`` and ``exclude()``)."""
         preds = []
         for key, val in kwargs.items():
             if key.endswith("__like"):
@@ -207,13 +199,7 @@ class Chain:
                 df = df.where(pred)
             return df
 
-        nxt = self._next(build)
-        # Still a pure conjunctive-filter plan unless a pending take just
-        # FOLDED into the frame (filters after an eager-fold see the
-        # truncated set, which a fused predicate could not reproduce).
-        if self._pure_filters is not None and self._limit is None:
-            nxt._pure_filters = self._pure_filters + [dict(kwargs)]
-        return nxt
+        return self._next(build)
 
     def exclude(self, **kwargs: Any) -> "Chain":
         """Negated filter (P3)."""
@@ -403,10 +389,6 @@ class Chain:
             (lambda: self.df()) if self._limit is not None
             else (lambda: self._df))
         nxt._limit = n
-        # A first take() is just a recorded cap over the pure-filter frame;
-        # a second one folded the previous cap into the plan — purity lost.
-        if self._limit is None:
-            nxt._pure_filters = self._pure_filters
         return nxt
 
     def include(self, *facets: str) -> "Chain":
@@ -424,7 +406,6 @@ class Chain:
         nxt = self._next(lambda: self._df)
         nxt._limit = self._limit
         nxt._facets = tuple(dict.fromkeys(self._facets + facets))
-        nxt._pure_filters = self._pure_filters  # frame untouched
         return nxt
 
     # -- terminal ----------------------------------------------------------
@@ -515,9 +496,6 @@ class Chain:
         # one — search, sort_by_fanin — extend it after this call).
         if nxt._cols is None:
             nxt._cols = self._cols
-        # Derived frames are NOT pure-filter plans by default — filter()/
-        # take()/include() re-assert purity explicitly after calling this.
-        nxt._pure_filters = None
         return nxt
 
 

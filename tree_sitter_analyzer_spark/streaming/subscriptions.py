@@ -8,12 +8,14 @@ ONLY the pairs whose result actually changed, with burst coalescing
 selector-string surface and Structured Streaming.
 
 Spark shape: subscriptions are driver-side metadata (tiny); evaluation is
-one lazy Chain plan per selector against the CURRENT table snapshot —
-``drive()`` plugs directly into a ``foreachBatch`` standing query (the
-I2 pattern in tests/test_streaming.py), so each micro-batch re-evaluates
-every active selector and ships per-subscriber deltas. Snapshots keep
-only result KEYS (image_id set, capped by the Chain's default cap), so
-registry memory is bounded per subscriber.
+the selector's own capped Chain plan — the one an ad-hoc ``answer()``
+runs — against the CURRENT table snapshot. ``drive()`` unions every due
+plan into two actions (keys, totals); the Spark jobs they run still grow
+with the number of sorted or spatial subscribers. ``drive()`` plugs directly into a ``foreachBatch`` standing query
+(the I2 pattern in tests/test_streaming.py), so each micro-batch
+re-evaluates every active selector and ships per-subscriber deltas.
+Snapshots keep only result KEYS (image_id set, capped by the Chain's
+default cap), so registry memory is bounded per subscriber.
 
 Delta contract: ``{added: [...], removed: [...], total_matches: N}`` —
 pushed only when non-empty (the "notify only when the selector result
@@ -110,40 +112,24 @@ class SubscriptionRegistry:
     @staticmethod
     def _eval_batch(
         table: DataFrame, plans: list[tuple[Subscription, Chain]]
-    ) -> dict[int, tuple[int, frozenset]]:
-        """Evaluate ALL subscriber plans in O(1) Spark jobs against ONE
-        shared snapshot (the reference coalesces re-evaluations through a
-        single watcher pass, ``watch_push_bridge.py:30-99``; the round-2
-        serial loop ran 2 jobs PER subscriber):
+    ) -> list[tuple[int, frozenset]]:
+        """Evaluate every subscriber plan against ONE cached snapshot in
+        two actions (the reference re-evaluates subscriptions with the
+        same evaluator as an ad-hoc query, ``watch_push_bridge.py:30-99``):
 
-        - the table snapshot is cached once, so every plan branch reads
-          the same materialization instead of re-scanning the source;
-        - PURE-FILTER subscribers (conjunctive ``key=value`` selectors +
-          an optional ``take`` — the common standing-query shape) are
-          FUSED into one scan: each subscriber becomes one struct in a
-          per-row ``explode(filter(array(...)))`` of its compiled
-          predicate, so N subscribers cost one pass over the snapshot and
-          a fixed number of exchanges — no per-subscriber plan branch at
-          all (an AQE union materializes one shuffle stage PER child, so
-          even a union-of-branches plan runs O(n) jobs);
-        - capped result keys for every KEY-ordered subscriber (fused scan
-          + non-pure chains alike) come from ONE union plan with a
-          CONSTANT number of exchanges: a two-phase windowed top-k (local
-          per-input-partition prune, then a final ``row_number() OVER
-          (PARTITION BY sub_idx ORDER BY key)``) — a per-branch
-          ``orderBy(KEY).limit(n)`` would compile to one single-partition
-          exchange PER subscriber;
-        - subscribers with a custom ``sort col desc`` selector keep their
-          own per-branch top-k (their order key types differ), unioned
-          into the same action;
-        - true totals for all subscribers = ONE union-of-aggregates job
-          (the fused subscribers again contribute a single union child).
+        - result keys: one union of each plan's own capped ``df()`` — the
+          Chain alone decides the cap order, so a subscriber sees exactly
+          what ``answer()`` returns for its selector;
+        - true totals: one union of the uncapped frames, counted per
+          subscriber.
 
-        Returns {plan_index: (total, keys)}."""
+        Jobs stay flat in the subscriber count for filter+take plans, but
+        each sorted or ``:within`` plan adds jobs of its own (2 → 8 mixed
+        filter/sort subscribers: 5 → 11 jobs). Returns (total, keys) per
+        plan, in plan order."""
         import functools
 
         from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
 
         sc = table.sparkSession.sparkContext
         # setJobGroup overwrites the caller's group and description; put
@@ -152,105 +138,25 @@ class SubscriptionRegistry:
         sc.setJobGroup("subs-drive", "batched subscription evaluation")
         table.persist()
         try:
-            union = lambda fs: functools.reduce(  # noqa: E731
-                lambda a, b: a.unionByName(b), fs
-            )
+            def union(frames):
+                return functools.reduce(lambda a, b: a.unionByName(b), frames)
 
-            def cap_of(plan: Chain) -> int:
-                return (
-                    plan._limit
-                    if plan._limit is not None
-                    else Chain.DEFAULT_MAX_RESULTS
+            keys: list[set] = [set() for _ in plans]
+            for r in union([
+                plan.df().select(
+                    F.lit(i).alias("sub_idx"),
+                    F.col(plan.KEY).cast("string").alias("k"),
                 )
-
-            key_frames = []
-            keyed = []  # (KEY-ordered cap) branches → shared window top-k
-            total_frames = []
-            fused = []  # (index, pure-filter plan) → one shared scan
-            for i, (_sub, plan) in enumerate(plans):
-                if plan._sort_cols is None and plan._pure_filters is not None:
-                    fused.append((i, plan))
-                    continue
-                total_frames.append(
-                    plan._df.select(F.lit(i).alias("sub_idx"))
-                )
-                if plan._sort_cols:
-                    key_frames.append(
-                        plan.df().select(
-                            F.lit(i).alias("sub_idx"),
-                            F.col(plan.KEY).cast("string").alias("k"),
-                        )
-                    )
-                else:
-                    keyed.append(
-                        plan._df.select(
-                            F.lit(i).alias("sub_idx"),
-                            F.col(plan.KEY).alias("key_ord"),
-                            F.col(plan.KEY).cast("string").alias("k"),
-                            F.lit(cap_of(plan)).alias("cap"),
-                        )
-                    )
-            if fused:
-                # One row-wise array of (sub_idx, matches?, cap) structs;
-                # explode only the matching entries. The predicate work is
-                # exactly N boolean exprs per row in ONE whole-stage-
-                # codegen pass over the cached snapshot.
-                key_col = type(fused[0][1]).KEY
-                structs = [
-                    F.struct(
-                        F.lit(i).alias("sub_idx"),
-                        functools.reduce(
-                            lambda a, b: a & b,
-                            [
-                                p
-                                for kw in plan._pure_filters
-                                for p in plan._filter_preds(kw)
-                            ],
-                            F.lit(True),
-                        ).alias("m"),
-                        F.lit(cap_of(plan)).alias("cap"),
-                    )
-                    for i, plan in fused
-                ]
-                exploded = table.select(
-                    F.col(key_col).alias("key_ord"),
-                    F.col(key_col).cast("string").alias("k"),
-                    F.explode(
-                        F.filter(F.array(*structs), lambda s: s["m"])
-                    ).alias("s"),
-                ).select(
-                    F.col("s.sub_idx").alias("sub_idx"),
-                    "key_ord",
-                    "k",
-                    F.col("s.cap").alias("cap"),
-                )
-                keyed.append(exploded)
-                total_frames.append(exploded.select("sub_idx"))
-            if keyed:
-                u = union(keyed).withColumn("pid", F.spark_partition_id())
-                w_local = Window.partitionBy("sub_idx", "pid").orderBy(
-                    "key_ord"
-                )
-                pruned = (
-                    u.withColumn("rn", F.row_number().over(w_local))
-                    .where(F.col("rn") <= F.col("cap"))
-                    .drop("rn", "pid")
-                )
-                w_final = Window.partitionBy("sub_idx").orderBy("key_ord")
-                key_frames.append(
-                    pruned.withColumn("rn", F.row_number().over(w_final))
-                    .where(F.col("rn") <= F.col("cap"))
-                    .select("sub_idx", "k")
-                )
-            keys: dict[int, set] = {i: set() for i in range(len(plans))}
-            for r in union(key_frames).collect():
+                for i, (_sub, plan) in enumerate(plans)
+            ]).collect():
                 keys[r["sub_idx"]].add(r["k"])
-            totals = {i: 0 for i in range(len(plans))}
-            for r in union(total_frames).groupBy("sub_idx").count().collect():
+            totals = [0] * len(plans)
+            for r in union([
+                plan._df.select(F.lit(i).alias("sub_idx"))
+                for i, (_sub, plan) in enumerate(plans)
+            ]).groupBy("sub_idx").count().collect():
                 totals[r["sub_idx"]] = r["count"]
-            return {
-                i: (totals[i], frozenset(keys[i])) for i in range(len(plans))
-            }
+            return [(t, frozenset(k)) for t, k in zip(totals, keys)]
         finally:
             table.unpersist()
             for p, v in saved.items():
@@ -264,11 +170,11 @@ class SubscriptionRegistry:
         a foreachBatch with the batch timestamp.
 
         Evaluation is BATCHED: all due subscribers share one cached
-        snapshot and O(1) Spark jobs (``_eval_batch``). Compile errors
-        (bad selector semantics) are isolated per subscription at plan
-        build; a runtime failure of the batched job falls back to
-        per-subscriber serial evaluation so one poisoned plan cannot take
-        down every other subscriber's delta."""
+        snapshot and two actions (``_eval_batch``). Compile errors (bad
+        selector semantics) are isolated per subscription at plan build;
+        a runtime failure of the batch re-runs ``_eval_batch`` once per
+        subscriber so one poisoned plan cannot take down every other
+        subscriber's delta."""
         due: list[tuple[tuple[str, str], Subscription]] = []
         for key, sub in list(self._subs.items()):
             if (
@@ -285,36 +191,29 @@ class SubscriptionRegistry:
             except Exception as exc:
                 sub.last_eval_at = now
                 sub.last_error = str(exc)
-        results: dict[int, tuple[int, frozenset]] | None = None
+        results: list[tuple[int, frozenset] | Exception] = []
         if plans:
             try:
                 results = self._eval_batch(table, plans)
             except Exception:
-                results = None  # fall back to serial isolation below
+                # Runtime failure: re-run each plan alone, so the error
+                # lands on the subscriber whose plan raised it.
+                for one in plans:
+                    try:
+                        results.append(self._eval_batch(table, [one])[0])
+                    except Exception as exc:
+                        results.append(exc)
 
         pushed: list[tuple[str, str]] = []
         dead: set[str] = set()
-        for i, (sub, plan) in enumerate(plans):
+        for (sub, _plan), result in zip(plans, results):
             if sub.session_id in dead:
                 continue
-            if results is not None:
-                total, keys_now = results[i]
-                keys_now = frozenset(keys_now)
-            else:
-                try:
-                    from pyspark.sql import functions as F
-
-                    total = plan._df.count()
-                    keys_now = frozenset(
-                        r["k"]
-                        for r in plan.df()
-                        .select(F.col(plan.KEY).cast("string").alias("k"))
-                        .collect()
-                    )
-                except Exception as exc:
-                    sub.last_eval_at = now
-                    sub.last_error = str(exc)
-                    continue
+            if isinstance(result, Exception):
+                sub.last_eval_at = now
+                sub.last_error = str(result)
+                continue
+            total, keys_now = result
             sub.last_eval_at = now
             sub.last_error = None
             if sub.last_keys is not None:
