@@ -115,8 +115,9 @@ def test_chain_build_runs_no_jobs(spark):
     env = chain.answer()
     assert len(tracker.getJobIdsForGroup("lazy-force")) > 0
     assert env["stats"]["returned"] == min(5, env["stats"]["total_matches"])
-    # The kNN force is cached on the chain: a second terminal returns the
-    # same envelope without re-running the kNN.
+    # The forced plan is cached on the chain: a second terminal re-runs
+    # the same lazy kNN plan against the resident index and returns the
+    # same envelope.
     assert chain.answer()["results"] == env["results"]
 
 

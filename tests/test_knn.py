@@ -12,7 +12,10 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from tree_sitter_analyzer_spark import synth
 from tree_sitter_analyzer_spark.operators import knn
+
+from .conftest import SF_TINY
 
 TILE_SCHEMA = "image_id string, lon double, lat double"
 QUERY_SCHEMA = "query_id bigint, qlon double, qlat double"
@@ -45,7 +48,7 @@ def _queries() -> pd.DataFrame:
         (139.70, 35.60),      # on the duplicates
         (139.6875, 35.5),     # on a cell boundary at every pyramid level
         (139.8125, 35.6875),  # midway between the equidistant pair
-        (141.5, 35.6),        # beside the extent: a coarse level answers
+        (141.5, 35.6),        # beside the extent: outside the bounding box
         (-120.0, -40.0),      # far outside the extent: no level reaches k
     ]
     rand = np.column_stack([rng.uniform(139.2, 140.2, 10), rng.uniform(35.2, 36.0, 10)])
@@ -87,7 +90,7 @@ def _assert_exact(spark, tiles: pd.DataFrame, queries: pd.DataFrame, k: int,
 @pytest.mark.parametrize("k", [1, 5, 12])
 def test_knn_exact_on_adversarial_points(spark, k, max_radius):
     """Ties, duplicates, a cell-boundary query, a query beside and one far
-    outside the extent; ``max_radius=1`` leaves one pyramid level, so most
+    outside the extent; ``max_radius=1`` leaves one index level, so most
     queries take the every-tile fallback."""
     tiles, queries = _tiles(), _queries()
     got = _assert_exact(spark, tiles, queries, k, max_radius=max_radius)
@@ -116,7 +119,7 @@ def test_knn_empty_sides(spark):
 
 def test_knn_rejects_empty_pyramid(spark):
     with pytest.raises(ValueError):
-        knn.knn_plan(_frame(spark, _tiles(), TILE_SCHEMA),
+        knn.knn_join(_frame(spark, _tiles(), TILE_SCHEMA),
                      _frame(spark, _queries(), QUERY_SCHEMA), max_radius=0)
 
 
@@ -124,25 +127,39 @@ def _jobs(spark, group: str, tiles, queries) -> int:
     sc = spark.sparkContext
     sc.setJobGroup(group, "kNN job count")
     try:
-        knn.knn_join(tiles, queries, k=5)
+        knn.knn_join(tiles, queries, k=5).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_knn_job_count_is_bounded(spark):
-    """One static plan: stragglers far from every tile cost no extra
-    Spark jobs (the replaced ring loop added checkpoints and emptiness
-    probes per round). The bound counts the plan's query stages — two
-    aggregate shuffles, three broadcasts, the top-k shuffle — and the
-    materializing job; adaptive execution may skip one."""
-    tiles = _frame(spark, _tiles(), TILE_SCHEMA)
-    q = _queries()
-    cases = {
+def _job_cases(q: pd.DataFrame) -> dict[str, pd.DataFrame]:
+    return {
         "near": q[q.query_id >= 5],
         "mixed": q,
         "far": q.assign(qlon=q.qlon - 200.0, qlat=-q.qlat),
     }
+
+
+def test_knn_job_count_is_bounded(spark):
+    """One static plan: stragglers far from every tile cost no extra
+    Spark jobs (the replaced ring loop added checkpoints and emptiness
+    probes per round). On a frame that is not a tiles snapshot the
+    index is an inline subplan; the bound counts the plan's query
+    stages — the index's two aggregate shuffles, two broadcasts, the
+    top-k shuffle — and the result job."""
+    tiles = _frame(spark, _tiles(), TILE_SCHEMA)
     jobs = {name: _jobs(spark, f"knn-{name}", tiles, _frame(spark, pdf, QUERY_SCHEMA))
-            for name, pdf in cases.items()}
+            for name, pdf in _job_cases(_queries()).items()}
     assert max(jobs.values()) <= 7, jobs
+
+
+def test_knn_warm_snapshot_call_runs_at_most_four_jobs(spark):
+    """On a ``synth.tiles_df`` leaf the index is resident after the
+    first call: a warm call runs the lookup broadcast, the fetch
+    broadcast, the top-k shuffle and the result job, near or far."""
+    tiles = synth.tiles_df(spark, SF_TINY)
+    knn.knn_join(tiles, synth.qpoints_df(spark), k=5).collect()  # warm
+    jobs = {name: _jobs(spark, f"knn-warm-{name}", tiles, _frame(spark, pdf, QUERY_SCHEMA))
+            for name, pdf in _job_cases(_queries()).items()}
+    assert max(jobs.values()) <= 4, jobs

@@ -77,36 +77,36 @@ def _plan_nodes(node, ancestors=()):
 
 
 def test_knn_has_no_cartesian(spark):
-    """kNN is one static plan with no cartesian product: every join is a
-    broadcast hash join whose build side is the query side, the tile
-    side is probed map-side, and the only shuffles are partial
-    aggregates and the partially limited candidate top-k."""
+    """kNN over a tiles snapshot is one lookup join and one fetch join
+    against the snapshot's resident index, with no cartesian product:
+    both joins are broadcast hash joins (the index's ``c0`` into the
+    query lookup, the fetch block into the ``tl`` probe), ``tl`` is
+    probed map-side, and the only shuffle is the partially limited
+    candidate top-k."""
     tiles, q = synth.tiles_df(spark, SF_TINY), synth.qpoints_df(spark)
-    df = knn.knn_plan(tiles, q, k=5)
+    df = knn.knn_join(tiles, q, k=5)
     plan = plan_of(df)
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin",
                 "SortMergeJoin", "ShuffledHashJoin"):
         assert bad not in plan
     nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan().initialPlan()))
     joins = [n for n, _ in nodes if n.nodeName() == "BroadcastHashJoin"]
-    assert len(joins) == 3
+    assert len(joins) == 2
     assert all(j.buildSide().toString() == "BuildRight" for j in joins)
     # query side broadcast: the query points only feed broadcasts
     ranges = [a for n, a in nodes if n.nodeName() == "Range"]
     assert ranges and all("BroadcastExchange" in a for a in ranges)
-    # tile side probed map-side: the fetch join streams the tile scan
-    # with no exchange in between
+    # tl probed map-side: the fetch join streams the resident scan with
+    # no exchange in between
     probes = [a[len(a) - a[::-1].index("BroadcastHashJoin"):] for n, a in nodes
               if n.nodeName() == "Scan ExistingRDD"]
     assert any("Exchange" not in a for a in probes)
-    # shuffles: the pyramid and the level sums (partial aggregates) and
-    # the top-k (partial window group limit)
+    # one shuffle: the top-k, over a partial window group limit
     below = [n.child() for n, _ in nodes if n.nodeName() == "Exchange"]
-    assert len(below) == 3
-    for n in below:
-        assert (n.nodeName() == "HashAggregate" and "partial_" in n.toString()) or (
-            n.nodeName() == "WindowGroupLimit" and "Partial" in n.toString())
-    assert knn.knn_join(tiles, q, k=5).count() == 250
+    assert len(below) == 1
+    assert (below[0].nodeName() == "WindowGroupLimit"
+            and "Partial" in below[0].toString())
+    assert df.count() == 250
 
 
 @pytest.mark.parametrize("qname", ["zonal_stats", "tile_manifest"])

@@ -5,6 +5,7 @@ coalescing, dead-session cleanup, foreachBatch integration."""
 from __future__ import annotations
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from tree_sitter_analyzer_spark import synth
@@ -189,6 +190,25 @@ def test_drive_keeps_callers_job_group(spark):
         for p in ("spark.jobGroup.id", "spark.job.description",
                   "spark.job.interruptOnCancel"):
             sc.setLocalProperty(p, None)
+
+
+def test_drive_keeps_callers_cache(spark):
+    """A snapshot the caller persisted stays cached across ``drive``, also
+    when the caller hands in another frame of the same plan: the batch
+    caches, and releases, only a table nobody else has cached."""
+    table = synth.tiles_df(spark, SF_TINY).where("w > 0").persist()
+    try:
+        reg = SubscriptionRegistry()
+        reg.subscribe("s1", "fmt=png take 3", lambda d: None)
+        reg.drive(table, now=0.0)
+        assert table.is_cached
+        reg.drive(synth.tiles_df(spark, SF_TINY).where("w > 0"), now=1.0)
+        assert table.storageLevel != StorageLevel.NONE
+        plain = synth.tiles_df(spark, SF_TINY).where("h > 0")
+        reg.drive(plain, now=2.0)
+        assert plain.storageLevel == StorageLevel.NONE
+    finally:
+        table.unpersist()
 
 
 def test_dead_session_cleanup_and_unsubscribe(spark):

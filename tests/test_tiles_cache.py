@@ -1,6 +1,7 @@
 """The materialized tiles table: ``synth.tiles_df`` serves one shallow,
 locally checkpointed leaf per source snapshot and variant, rebuilds it
-when ``orders.parquet`` changes, and releases evicted blocks."""
+when ``orders.parquet`` changes, and releases evicted blocks — the
+snapshot's lazily built kNN index with them."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from tree_sitter_analyzer_spark import synth
+from tree_sitter_analyzer_spark.operators import ingest, knn
 
 from .conftest import SF_TINY
 
@@ -95,6 +97,8 @@ def test_variants_never_collide(spark, fresh, monkeypatch):
 
 
 def test_eviction_returns_persistent_rdds_to_baseline(spark, fresh, tmp_path):
+    """Each snapshot holds its leaf and, once kNN has run on it, the
+    index's two frames; eviction releases all three."""
     base = persisted(spark)
     slots = synth.TILES_CACHE_SLOTS
     first = None
@@ -102,13 +106,90 @@ def test_eviction_returns_persistent_rdds_to_baseline(spark, fresh, tmp_path):
         df = synth.tiles_df(spark, write_orders(tmp_path / f"s{n}", range(10 + n)))
         if n == 0:
             first = df
-        assert len(persisted(spark) - base) == min(n + 1, slots)
+        assert len(persisted(spark) - base) == min(n + 1, slots) + 2 * min(n, slots - 1)
+        assert knn.knn_join(df, synth.qpoints_df(spark), k=3).count() == 3 * 50
+        assert len(persisted(spark) - base) == 3 * min(n + 1, slots)
     assert df.count() == 10 + slots + 1
     # the evicted first snapshot rebuilds as a new materialization
     rebuilt = synth.tiles_df(spark, str(tmp_path / "s0"))
     assert rebuilt is not first and rebuilt.count() == 10
     synth.drop_tiles_cache()
     assert persisted(spark) == base
+
+
+def _count_index_builds(monkeypatch) -> list[int]:
+    builds = []
+    build = knn._index
+
+    def counting(*a, **kw):
+        builds.append(threading.get_ident())
+        return build(*a, **kw)
+
+    monkeypatch.setattr(knn, "_index", counting)
+    return builds
+
+
+def test_knn_index_is_built_once_per_snapshot(spark, fresh, tmp_path, monkeypatch):
+    builds = _count_index_builds(monkeypatch)
+    q = synth.qpoints_df(spark)
+    leaf = synth.tiles_df(spark, SF_TINY)
+    first = knn.knn_join(leaf, q, k=5).collect()
+    assert knn.knn_join(leaf, q, k=9).count() == 9 * 50
+    assert knn.knn_index(leaf, 7, 7) is knn.knn_index(leaf, 7, 7)
+    assert len(builds) == 1
+    # the resident answer is the inline one
+    assert sorted(first) == sorted(knn.knn_join(leaf.where("w > 0"), q, k=5).collect())
+    # another index shape and another snapshot each build their own
+    knn.knn_join(leaf, q, k=5, max_radius=8)
+    other = synth.tiles_df(spark, write_orders(tmp_path, range(300)))
+    knn.knn_join(other, q, k=5)
+    assert len(builds) == 4  # the inline call above counts as one
+
+
+def test_concurrent_first_knn_calls_build_index_once(spark, fresh, monkeypatch):
+    """More first kNN callers than cores, with frequent thread switches:
+    one index build, and every caller gets that build."""
+    builds = _count_index_builds(monkeypatch)
+    leaf = synth.tiles_df(spark, SF_TINY)
+    n_threads = 8
+    barrier = threading.Barrier(n_threads)
+    got, errors = [], []
+
+    def call():
+        try:
+            barrier.wait(timeout=60)
+            got.append(knn.knn_index(leaf, 7, 7))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=call) for _ in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(builds) == 1
+    assert len(got) == n_threads and all(g is got[0] for g in got)
+    assert knn.knn_join(leaf, synth.qpoints_df(spark), k=5).count() == 250
+
+
+def test_extractions_leave_serving_snapshot_cached(spark, fresh, tmp_path):
+    """Ingest's extraction reads the lazy plan: however many batches it
+    extracts, a held serving snapshot stays cached and answerable."""
+    leaf = synth.tiles_df(spark, SF_TINY)
+    held = persisted(spark)
+    for n in range(synth.TILES_CACHE_SLOTS + 1):
+        sf = write_orders(tmp_path / f"changed_{n}", range(100 * n, 100 * n + 7))
+        assert ingest.extract_tiles(spark, sf).count() == 7
+    assert persisted(spark) == held
+    assert synth.tiles_df(spark, SF_TINY) is leaf
+    assert leaf.count() == 1500
 
 
 @pytest.mark.parametrize("n_threads", [4, 8])

@@ -31,11 +31,14 @@ def extract_tiles(
 ) -> DataFrame:
     """tiles(+bytes) → decoded pixel stats + cell index, one map-side pass.
 
-    No shuffle anywhere: synth → encode → decode → phash → cell are all
-    narrow. On a real cluster this is the scan-time extraction pass over
-    the trillion-row Iceberg table.
+    No shuffle past the seed spread: synth → encode → decode → phash →
+    cell are all narrow. On a real cluster this is the scan-time
+    extraction pass over the trillion-row Iceberg table. A one-shot
+    read: it runs ``synth.tiles_plan`` directly, so extracting a batch
+    of changed tiles neither builds a snapshot nor evicts a serving one
+    from ``synth.tiles_df``'s cache.
     """
-    t = synth.tiles_df(spark, sf_dir, amplify=amplify)
+    t = synth.tiles_plan(spark, sf_dir, amplify)
     # Fused synth→encode→decode→verify (one Arrow pass); production with
     # real stored bytes would use decode_stats(tiles_with_bytes) instead.
     t = codec.synth_decode_stats_fused(t)

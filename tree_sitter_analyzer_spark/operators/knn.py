@@ -1,21 +1,34 @@
-"""Exact grid-bucketed kNN join in one static two-phase plan — no cross
-join on the normal path, no driver loop.
+"""Exact grid-bucketed kNN join: one lookup join and one fetch join per
+query against a per-snapshot index — no cross join on the normal path,
+no driver loop.
 
 Filter with an approximation, then refine exactly (the count-sketch
-filter of *Raster Intervals*, SIGMOD 2023; the reference's over-fetch +
+filter of *Raster Intervals*, SIGMOD 2023, which stores the
+approximation with the data; the reference's warm-index over-fetch +
 exact re-rank + truncate contract, ``_ast_cache_query.py:155-267``,
-SURVEY.md T1/O5):
+SURVEY.md T1/O5).
 
-- **Count phase.** A cell-count pyramid of the tiles: counts per
-  ``(j, ix >> j, iy >> j)`` for levels j = 0..J, J = min(log2
-  ``max_radius``, ``res``), where (ix, iy) is the res-``res`` grid cell.
-  Each query sums the 3×3 level-j block around its own level-j cell and
-  takes j*, the smallest level whose block holds at least k tiles. The
-  block count is monotone in j (the level-(j+1) block contains the
-  level-j block), so j* is one static CASE over the per-level sums.
-- **Fetch phase.** Candidates are the tiles of the 7×7 level-j* block
-  with ``dist2 <= 9·s²``, s = the level-j* cell size; the exact
-  ``(dist2, image_id)`` ``row_number`` keeps the top k.
+**The index** (query-independent, keyed by ``(res, levels)``; levels
+j = 0..J, J = min(log2 ``max_radius``, ``res``), over the res-``res``
+grid cell (ix, iy) of each tile):
+
+- ``tl``: every tile once per level -1..J as ``(image_id, lon, lat, j,
+  cx, cy)``, (cx, cy) = (ix >> j, iy >> j); level -1 is the sentinel
+  cell (0, 0).
+- ``c0``: one row per res-``res`` cell (cx, cy) of the tiles' bounding
+  box, ``n3s[j]`` = the tile count of the 3×3 block of level-j cells
+  around (cx >> j, cy >> j). Built from ``tl``'s level rows: each tile
+  counts toward the 3×3 neighbours of its level-j cell (one partial
+  aggregate), the per-level block counts are gathered into lookup maps
+  (one global aggregate), and the bounding box's cells read their
+  ``n3s`` from them.
+
+**The query.** Each query point looks up its own cell in ``c0`` and
+takes j*, the smallest level with ``n3s[j] >= k``. The block count is
+monotone in j (the level-(j+1) block contains the level-j block), so j*
+is one static CASE. Candidates are the ``tl`` rows of the 7×7 level-j*
+block with ``dist2 <= 9·s²``, s = the level-j* cell size; the exact
+``(dist2, image_id)`` ``row_number`` keeps the top k.
 
 Exactness: the query lies in its cell [cx, cx+1)·s, so every tile of
 the 3×3 block is less than 2s away on each axis, i.e. within 2√2·s.
@@ -28,24 +41,30 @@ distance ≤ d_k, and so do the survivors of ``dist2 <= 9·s²`` (d_k² <
 arithmetic rounds by ~1e-14 degrees, far inside the 2√2 → 3 margin; the
 ranking itself uses the oracle's distance text (``DIST2_SQL``).
 
-Degenerate queries (no level reaches k: k above the tile count, or a
-query farther than the level-J block from k tiles) get j* = -1, a
-sentinel level: every tile also carries one row at level -1 in cell
-(0, 0), so the same equi-join hands those queries every tile, exactly —
-no driver-side emptiness probe.
+Degenerate queries get j* = -1, the sentinel level, and the same
+equi-join hands them every tile (``tl``'s level -1 puts every tile in
+cell (0, 0)) — exact, with no driver-side emptiness probe. They are the
+queries no level reaches k for (k above the tile count, or farther than
+the level-J block from k tiles) and the queries outside the bounding
+box, which have no ``c0`` row.
+
+Index lifetime: when ``tiles`` IS a ``synth.tiles_df`` leaf, the index
+is built once per snapshot on first use (``TilesSnapshot.derived``,
+under the snapshot's lock), kept as locally checkpointed frames and
+released when the snapshot is evicted. Any other frame (a filtered
+chain, a folded ``take``, a test frame) gets the same index SQL inlined
+as a lazy subplan: residency is the only difference.
 
 Scale design (10^12 tiles, modest query set):
-- The query side (3×3 blocks of every level, then the 7×7 fetch block)
-  is broadcast; the tile side is probed map-side. Nothing per query is
-  collected to the driver.
-- The only shuffles are partial aggregates — the pyramid is O(non-empty
-  cells), the per-query level sums O(#queries) — and the candidate
-  top-k, which Spark's window group limit prunes to ≤ k rows per query
-  per partition before the exchange.
-- The pyramid is query-independent but rebuilt per call; it could be
-  materialized once per tiles snapshot.
-- One SQL statement: a chain of DataFrame calls would pay ~10 ms of
-  analysis per call on the serving path.
+- ``tl`` is (J+2) narrow rows per tile and stays partitioned as the
+  tiles are; the fetch block is broadcast and ``tl`` probed map-side.
+- ``c0`` is broadcast into the lookup join; it grows with the bounding
+  box's area at ``res``, not with the tile count.
+- The only per-query shuffle is the candidate top-k, which Spark's
+  window group limit prunes to ≤ k rows per query per partition before
+  the exchange.
+- One SQL statement per step: a chain of DataFrame calls would pay
+  ~10 ms of analysis per call on the serving path.
 """
 
 from __future__ import annotations
@@ -53,7 +72,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import grid
+from .. import grid, synth
 from .pip_join import tile_cells
 
 DEFAULT_KNN_RES = 7
@@ -66,48 +85,89 @@ DIST2_ORACLE_SQL = (
 )
 
 
-def _knn_sql(k: int, res: int, levels: int) -> str:
-    """The two-phase plan over views ``{tiles}`` and ``{qpoints}``
-    (placeholders filled by ``spark.sql``'s DataFrame arguments)."""
-    top = levels - 1
-    sums = ",\n         ".join(
-        f"sum(CASE WHEN b.j = {j} THEN p.n END) AS n{j}" for j in range(levels)
+def _tl_sql(res: int, levels: int) -> str:
+    """The index's tile-level rows over view ``{tiles}``."""
+    return f"""
+SELECT image_id, lon, lat, j,
+       IF(j < 0, 0L, shiftright(ix, j)) AS cx, IF(j < 0, 0L, shiftright(iy, j)) AS cy
+FROM (SELECT image_id, lon, lat,
+             {grid.ix_sql("lon", res)} AS ix, {grid.iy_sql("lat", res)} AS iy
+      FROM {{tiles}})
+  LATERAL VIEW explode(sequence(-1, {levels - 1})) AS j
+"""
+
+
+def _c0_sql(levels: int) -> str:
+    """The index's per-cell block counts over view ``{tl}``."""
+
+    def key(x: str, y: str) -> str:
+        return f"shiftleft({x}, 32) + {y}"  # unique for y in [-1, 2^31)
+
+    maps = ",\n         ".join(
+        f"map_from_entries(collect_list(IF(j = {j}, struct({key('bx', 'by_')}, n), NULL)))"
+        f" AS m{j}"
+        for j in range(levels)
     )
-    jstar = " ".join(f"WHEN l.n{j} >= {k} THEN {j}" for j in range(levels))
+    n3s = ", ".join(
+        f"coalesce(m{j}[{key(f'shiftright(cx, {j})', f'shiftright(cy, {j})')}], 0L)"
+        for j in range(levels)
+    )
+    return f"""
+WITH block AS (
+  SELECT j, cx + dx AS bx, cy + dy AS by_, count(*) AS n
+  FROM {{tl}} LATERAL VIEW explode(sequence(-1, 1)) AS dx
+             LATERAL VIEW explode(sequence(-1, 1)) AS dy
+  WHERE j >= 0
+  GROUP BY 1, 2, 3
+),
+lut AS (
+  -- level-0 blocks reach one cell past the tiles on every side
+  SELECT min(IF(j = 0, bx, NULL)) + 1 AS x0, max(IF(j = 0, bx, NULL)) - 1 AS x1,
+         min(IF(j = 0, by_, NULL)) + 1 AS y0, max(IF(j = 0, by_, NULL)) - 1 AS y1,
+         {maps}
+  FROM block
+)
+SELECT cx, cy, array({n3s}) AS n3s
+FROM lut LATERAL VIEW explode(sequence(x0, x1)) AS cx
+         LATERAL VIEW explode(sequence(y0, y1)) AS cy
+"""
+
+
+def _index(tiles: DataFrame, res: int, levels: int,
+           keep=lambda df: df) -> tuple[DataFrame, DataFrame]:
+    """(tl, c0) over ``tiles``; ``keep`` materializes each frame or,
+    by default, leaves it a lazy subplan."""
+    spark = tiles.sparkSession
+    tl = keep(spark.sql(_tl_sql(res, levels), tiles=tiles))
+    return tl, keep(spark.sql(_c0_sql(levels), tl=tl))
+
+
+def knn_index(tiles: DataFrame, res: int, levels: int) -> tuple[DataFrame, DataFrame]:
+    """The (tl, c0) index of ``tiles``: resident in its snapshot when
+    ``tiles`` is a ``synth.tiles_df`` leaf, else inlined lazily."""
+    snap = synth.tiles_snapshot(tiles)
+    if snap is None:
+        return _index(tiles, res, levels)
+    return snap.derived(
+        ("knn", res, levels), lambda keep: _index(snap.leaf, res, levels, keep))
+
+
+def _knn_sql(k: int, res: int, levels: int) -> str:
+    """The query over views ``{qpoints}``, ``{tl}`` and ``{c0}``
+    (placeholders filled by ``spark.sql``'s DataFrame arguments)."""
+    jstar = " ".join(f"WHEN c.n3s[{j}] >= {k} THEN {j}" for j in range(levels))
     # level-j* cell edge in degrees: 2^j* / 2^res, exact in doubles
     cell = f"(CAST(shiftleft(1L, jstar) AS DOUBLE) / {1 << res}.0D)"
     return f"""
-WITH t AS (
-  SELECT image_id, lon, lat,
-         {grid.ix_sql("lon", res)} AS ix, {grid.iy_sql("lat", res)} AS iy
-  FROM {{tiles}}
-),
-q AS (
+WITH q AS (
   SELECT query_id, qlon, qlat,
          {grid.ix_sql("qlon", res)} AS qix, {grid.iy_sql("qlat", res)} AS qiy
   FROM {{qpoints}}
 ),
-pyramid AS (
-  SELECT j, shiftright(ix, j) AS cx, shiftright(iy, j) AS cy, count(*) AS n
-  FROM t LATERAL VIEW explode(sequence(0, {top})) AS j
-  GROUP BY 1, 2, 3
-),
-qblock AS (
-  SELECT query_id, j, shiftright(qix, j) + dx AS cx, shiftright(qiy, j) + dy AS cy
-  FROM q LATERAL VIEW explode(sequence(0, {top})) AS j
-         LATERAL VIEW explode(sequence(-1, 1)) AS dx
-         LATERAL VIEW explode(sequence(-1, 1)) AS dy
-),
-level AS (
-  SELECT /*+ BROADCAST(b) */ b.query_id,
-         {sums}
-  FROM pyramid p JOIN qblock b ON p.j = b.j AND p.cx = b.cx AND p.cy = b.cy
-  GROUP BY b.query_id
-),
 qstar AS (
-  SELECT /*+ BROADCAST(l) */ q.query_id, q.qlon, q.qlat, q.qix, q.qiy,
+  SELECT /*+ BROADCAST(c) */ q.query_id, q.qlon, q.qlat, q.qix, q.qiy,
          CASE {jstar} ELSE -1 END AS jstar
-  FROM q LEFT JOIN level l ON q.query_id = l.query_id
+  FROM q LEFT JOIN {{c0}} c ON c.cx = q.qix AND c.cy = q.qiy
 ),
 qfetch AS (
   SELECT query_id, qlon, qlat, jstar,
@@ -118,15 +178,10 @@ qfetch AS (
     LATERAL VIEW explode(IF(jstar < 0, array(0), sequence(-3, 3))) AS dx
     LATERAL VIEW explode(IF(jstar < 0, array(0), sequence(-3, 3))) AS dy
 ),
-tl AS (
-  SELECT image_id, lon, lat, j,
-         IF(j < 0, 0L, shiftright(ix, j)) AS cx, IF(j < 0, 0L, shiftright(iy, j)) AS cy
-  FROM t LATERAL VIEW explode(sequence(-1, {top})) AS j
-),
 cand AS (
   SELECT /*+ BROADCAST(f) */ f.query_id, tl.image_id, f.jstar, f.bound2,
          {DIST2_SQL} AS dist2
-  FROM tl JOIN qfetch f ON tl.j = f.jstar AND tl.cx = f.cx AND tl.cy = f.cy
+  FROM {{tl}} tl JOIN qfetch f ON tl.j = f.jstar AND tl.cx = f.cx AND tl.cy = f.cy
 )
 SELECT query_id, CAST(rank AS BIGINT) AS rank, image_id,
        CAST(floor(dist2 * 1e12) AS BIGINT) AS dist2_nano
@@ -139,22 +194,6 @@ WHERE rank <= {k}
 """
 
 
-def knn_plan(
-    tiles: DataFrame,
-    qpoints: DataFrame,
-    k: int = 5,
-    res: int = DEFAULT_KNN_RES,
-    max_radius: int = 64,
-) -> DataFrame:
-    """The lazy plan ``knn_join`` materializes (same arguments)."""
-    if max_radius < 1:
-        raise ValueError(f"max_radius must be >= 1, got {max_radius}")
-    levels = min(max_radius.bit_length() - 1, res) + 1
-    return qpoints.sparkSession.sql(
-        _knn_sql(k, res, levels), tiles=tiles, qpoints=qpoints
-    )
-
-
 def knn_join(
     tiles: DataFrame,
     qpoints: DataFrame,
@@ -162,18 +201,23 @@ def knn_join(
     res: int = DEFAULT_KNN_RES,
     max_radius: int = 64,
 ) -> DataFrame:
-    """Exact k nearest tiles per query point.
+    """Exact k nearest tiles per query point, as a lazy plan.
 
     Returns (query_id, rank, image_id, dist2_nano) with deterministic
     (dist2, image_id) tie-breaking; ``dist2_nano = floor(dist2 * 1e12)``
     keeps the compared output integer-typed (cross-engine hash safety).
-    ``max_radius`` (in res-``res`` cells) sizes the pyramid: levels
+    ``max_radius`` (in res-``res`` cells) sizes the index: levels
     0..min(log2 max_radius, res); queries beyond its top block fall back
-    to every tile.
+    to every tile. The first call on a ``synth.tiles_df`` leaf builds
+    its resident index (Spark jobs); the query itself runs when the
+    result is.
     """
-    # One materialization keeps downstream consumers (joins back to tile
-    # rows, self-join renumbering) from re-running the plan.
-    return knn_plan(tiles, qpoints, k, res, max_radius).localCheckpoint(eager=True)
+    if max_radius < 1:
+        raise ValueError(f"max_radius must be >= 1, got {max_radius}")
+    levels = min(max_radius.bit_length() - 1, res) + 1
+    tl, c0 = knn_index(tiles, res, levels)
+    return qpoints.sparkSession.sql(
+        _knn_sql(k, res, levels), qpoints=qpoints, tl=tl, c0=c0)
 
 
 def radius_join(

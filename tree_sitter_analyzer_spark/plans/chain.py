@@ -114,9 +114,9 @@ class Chain:
         # The chain's frame, possibly DEFERRED: either a concrete DataFrame
         # or a zero-arg thunk that builds one. Steps compose thunks, so
         # building a chain never executes Spark jobs — even ``near()``,
-        # whose kNN materializes its result, only runs when a terminal
-        # (``df()``/``answer()``) forces ``_df``. The force
-        # is cached here, so a chain's expensive step runs at most once
+        # whose force may build the snapshot's kNN index, only runs when
+        # a terminal (``df()``/``answer()``) forces ``_df``. The force
+        # is cached here, so a chain's step is planned at most once
         # however many children force it.
         self._frame: Any = df
         # Statically-known output columns: every chain step preserves its
@@ -259,11 +259,13 @@ class Chain:
         """k nearest tiles to a point (two-phase kNN, operators/knn.py),
         joined back to full tile rows.
 
-        kNN materializes its result (an eager local checkpoint), so the
-        step is DEFERRED: building a chain with ``near`` (or stacking
-        further steps on it) runs no Spark jobs; the search executes once,
-        at the first terminal that forces the frame (``answer()``/
-        ``df()``), and the forced result is cached on this chain object."""
+        The step is DEFERRED: its first force builds the tiles
+        snapshot's kNN index when the chain's base is the snapshot leaf
+        (once per snapshot, Spark jobs), so building a chain with
+        ``near`` (or stacking further steps on it) runs no Spark jobs.
+        The kNN itself is a lazy plan and runs inside each terminal's
+        action: ``answer()`` runs it once, in the capped fetch, and
+        again only for the true total when more than the cap match."""
         def build() -> DataFrame:
             # One-row query frame built JVM-side: a frame from a Python
             # list would start a Python worker to scan it on every call.
@@ -275,7 +277,7 @@ class Chain:
                 f"CAST('{float(lat)!r}' AS DOUBLE)) AS q(query_id, qlon, qlat)")
             base = self._base()
             hits = knn_ops.knn_join(base, q, k=k).select("image_id", "rank")
-            return base.join(hits, "image_id").drop("rank")
+            return base.join(F.broadcast(hits), "image_id").drop("rank")
 
         return self._next(build)
 
@@ -448,17 +450,22 @@ class Chain:
     def answer(self, compact: bool = False) -> dict[str, Any]:
         """Execute: capped rows + true totals envelope (T5 contract).
         Uncapped chains are capped at ``DEFAULT_MAX_RESULTS`` with
-        ``was_truncated`` set — a driver collect is never unbounded."""
-        total = self._df.count()
+        ``was_truncated`` set — a driver collect is never unbounded.
+
+        One evaluation when the match set fits the cap: the capped fetch
+        takes one row past the cap, and only when that row arrives does
+        a ``count()`` run for the true total."""
         limit = self._limit if self._limit is not None else self.DEFAULT_MAX_RESULTS
         # Same deterministic-cap rule as df(): recorded sort spec (or the
         # unique KEY) orders before the limit, so the returned subset is
         # stable across runs and honors a sort issued earlier in the chain.
-        rows_df = self._ordered().limit(limit)
+        rows_df = self._ordered().limit(limit + 1)
         if compact:
             rows_df = rows_df.select(*self.COMPACT_COLS)
         rows = [r.asDict() for r in rows_df.collect()]
-        truncated = total > limit
+        truncated = len(rows) > limit
+        total = self._df.count() if truncated else len(rows)
+        rows = rows[:limit]
         env: dict[str, Any] = {
             "verdict": "ok",
             "results": rows,

@@ -100,8 +100,8 @@ def q_pip_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "knn",
     _CTES + "\n" + knn.knn_oracle_sql(k=5),
-    doc="Exact k=5 nearest tiles per query point via a cell-count pyramid "
-    "and one exact fetch (SURVEY.md J6/T1/T2) — oracle is the naive "
+    doc="Exact k=5 nearest tiles per query point via the snapshot's "
+    "cell-count index and one exact fetch (SURVEY.md J6/T1/T2) — oracle is the naive "
     "cross join.",
 )
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:

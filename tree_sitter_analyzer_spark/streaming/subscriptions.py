@@ -28,6 +28,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from ..plans.chain import Chain
@@ -136,7 +137,14 @@ class SubscriptionRegistry:
         # them back afterwards (None removes a property that was unset).
         saved = {p: sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS}
         sc.setJobGroup("subs-drive", "batched subscription evaluation")
-        table.persist()
+        # Cache the snapshot for the two actions unless the caller already
+        # has; release only a cache this call made. Spark caches by plan,
+        # so ask for the plan's storage level: ``is_cached`` only knows
+        # whether this DataFrame object was persisted, and unpersisting
+        # an equal plan would drop the caller's cache.
+        cached = table.storageLevel != StorageLevel.NONE
+        if not cached:
+            table.persist()
         try:
             def union(frames):
                 return functools.reduce(lambda a, b: a.unionByName(b), frames)
@@ -158,7 +166,8 @@ class SubscriptionRegistry:
                 totals[r["sub_idx"]] = r["count"]
             return [(t, frozenset(k)) for t, k in zip(totals, keys)]
         finally:
-            table.unpersist()
+            if not cached:
+                table.unpersist()
             for p, v in saved.items():
                 sc.setLocalProperty(p, v)
 
