@@ -3,6 +3,7 @@ totals, SURVEY.md T5), filter/exclude/spatial steps vs direct predicates."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tree_sitter_analyzer_spark import synth
@@ -48,6 +49,20 @@ def test_within_outside_partition(spark):
     outside = base.outside_zones().df().count()
     assert inside + outside == base.df().count()
     assert inside > 0 and outside > 0
+
+
+@pytest.mark.parametrize("kind", ["district", "park", "water"])
+def test_within_outside_resident_cover_matches_inline(spark, kind):
+    """Filtering the zone layer's resident cover answers exactly what
+    covering a caller-supplied zones frame (the inline path) answers."""
+    base = Engine(spark, SF_TINY).tiles()
+    inline = synth.zones_plan(spark)
+    for step in ("within_zones", "outside_zones"):
+        got = getattr(base, step)(kind=kind).take(40).answer()
+        want = getattr(base, step)(zones=inline, kind=kind).take(40).answer()
+        assert got["stats"] == want["stats"], step
+        assert got["results"] == want["results"], step
+        assert got["stats"]["was_truncated"] and got["stats"]["returned"] == 40
 
 
 def test_answer_envelope_truncation(spark):

@@ -152,6 +152,26 @@ def test_pip_semi_anti_is_one_broadcast_join(spark, how, join_type):
     assert join_type in joins[0] and "BuildRight" in joins[0], joins
 
 
+def test_zone_pip_plans_read_the_resident_cover(spark):
+    """PIP queries over the zone layer scan its resident cover: no
+    Generate (the cover's explode) and no Range (the zones' source) is
+    left in the plan of the ``pip_join`` and ``zonal_stats`` registry
+    queries or of a ``:within`` selector chain."""
+    from tree_sitter_analyzer_spark.plans.chain import Engine
+
+    frames = {
+        name: load_all()[name].spark_fn(spark, SF_TINY)
+        for name in ("pip_join", "zonal_stats")
+    }
+    frames["within"] = Engine(spark, SF_TINY).select(
+        "kind=park :within(water) take 5").df()
+    for name, df in frames.items():
+        names = {n.nodeName() for n, _ in
+                 _plan_nodes(df._jdf.queryExecution().executedPlan().initialPlan())}
+        assert "BroadcastHashJoin" in names, (name, names)
+        assert not names & {"Generate", "Range"}, (name, names)
+
+
 def test_zonal_weighted_single_terminal_exchange(spark):
     """Reference-point dedup means NO distinct: the only exchange in the
     weighted-zonal plan is the terminal groupBy(polygon_id) hash

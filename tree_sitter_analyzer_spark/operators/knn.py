@@ -49,7 +49,7 @@ the level-J block from k tiles) and the queries outside the bounding
 box, which have no ``c0`` row.
 
 Index lifetime: when ``tiles`` IS a ``synth.tiles_df`` leaf, the index
-is built once per snapshot on first use (``TilesSnapshot.derived``,
+is built once per snapshot on first use (``synth.Snapshot.derived``,
 under the snapshot's lock), kept as locally checkpointed frames and
 released when the snapshot is evicted. Any other frame (a filtered
 chain, a folded ``take``, a test frame) gets the same index SQL inlined
@@ -145,7 +145,7 @@ def _index(tiles: DataFrame, res: int, levels: int,
 def knn_index(tiles: DataFrame, res: int, levels: int) -> tuple[DataFrame, DataFrame]:
     """The (tl, c0) index of ``tiles``: resident in its snapshot when
     ``tiles`` is a ``synth.tiles_df`` leaf, else inlined lazily."""
-    snap = synth.tiles_snapshot(tiles)
+    snap = synth.snapshot(tiles)
     if snap is None:
         return _index(tiles, res, levels)
     return snap.derived(

@@ -43,6 +43,14 @@ _FILTER_COLS = {
 }
 
 
+def _pip(tiles: DataFrame, cover: DataFrame, how: str = "inner") -> DataFrame:
+    """Rectangle PIP join of ``tiles`` against a (filtered) zone cover at
+    the default res."""
+    return pip_ops.cover_join(
+        tiles, grid.cell_col("lon", "lat", pip_ops.DEFAULT_RES), cover,
+        pip_ops.PIP_PREDICATE, how)
+
+
 # --- facet builders (the reference's include= step) --------------------------
 # _codegraph_query_facets.py:21-145 attaches complexity/health/risk facets
 # to the query response; here each facet is a small aggregate DataFrame
@@ -216,44 +224,47 @@ class Chain:
 
     # -- spatial steps (J2/J6) -------------------------------------------
 
-    def _zone_frame(self, zones: DataFrame | None,
-                    zone_filter: dict) -> Callable[[], DataFrame]:
-        """Shared zone-side builder: validate filter keys at chain-build,
-        construct the (possibly filtered) zone frame at force time."""
+    def _zone_side(self, zones: DataFrame | None, zone_filter: dict,
+                   side: Callable[[DataFrame], DataFrame] = pip_ops.zone_cover
+                   ) -> Callable[[], DataFrame]:
+        """Shared zone-side builder: validate filter keys at chain-build;
+        at force time, ``side`` (a cover) of the caller's zones frame or
+        of the resident zone layer, filtered. Cover rows carry the zone
+        columns, so the filter keeps exactly the rows covering the
+        filtered zones would — on the zone layer it filters the resident
+        cover instead of exploding a filtered zones frame per query."""
         cols = [({"kind": "zkind", "polygon_id": "polygon_id"}[k], v)
                 for k, v in zone_filter.items()]
 
         def build() -> DataFrame:
-            z = zones if zones is not None else synth.zones_df(self._spark)
+            df = side(zones if zones is not None else synth.zones_df(self._spark))
             for col, v in cols:
-                z = z.where(F.col(col) == v)
-            return z
+                df = df.where(F.col(col) == v)
+            return df
 
         return build
 
     def within_zones(self, zones: DataFrame | None = None, **zone_filter: Any
                      ) -> "Chain":
         """Keep tiles inside matching zones (PIP semi-join)."""
-        zb = self._zone_frame(zones, zone_filter)
-        return self._next(
-            lambda: pip_ops.pip_join(self._base(), zb(), how="semi"))
+        cover = self._zone_side(zones, zone_filter)
+        return self._next(lambda: _pip(self._base(), cover(), "semi"))
 
     def outside_zones(self, zones: DataFrame | None = None, **zone_filter: Any
                       ) -> "Chain":
-        zb = self._zone_frame(zones, zone_filter)
-        return self._next(
-            lambda: pip_ops.pip_join(self._base(), zb(), how="anti"))
+        cover = self._zone_side(zones, zone_filter)
+        return self._next(lambda: _pip(self._base(), cover(), "anti"))
 
     def adjacent_zones(self, zones: DataFrame | None = None,
                        **zone_filter: Any) -> "Chain":
         """Keep tiles ADJACENT to matching zones — in the perimeter ring
         of the zone's cell cover, not inside it (the reference's sibling
         combinator `~`, hyphae/parser.py)."""
-        zb = self._zone_frame(zones, zone_filter)
+        ring = self._zone_side(zones, zone_filter, pip_ops.zone_fringe_cells)
         return self._next(
             lambda: pip_ops.cover_join(
                 self._base(), grid.cell_col("lon", "lat", pip_ops.FRINGE_RES),
-                pip_ops.zone_fringe_cells(zb()), how="semi"))
+                ring(), how="semi"))
 
     def near(self, lon: float, lat: float, k: int = 10) -> "Chain":
         """k nearest tiles to a point (two-phase kNN, operators/knn.py),
@@ -354,12 +365,12 @@ class Chain:
         Plan shape: one broadcast PIP candidate join → per-tile count →
         merge-back join on image_id; the tile side never shuffles for the
         count itself (the count aggregates the small join-row side)."""
-        zb = self._zone_frame(zones, zone_filter)
+        cover = self._zone_side(zones, zone_filter)
 
         def build() -> DataFrame:
             base = self._base()
             counts = (
-                pip_ops.pip_join(base, zb())
+                _pip(base, cover())
                 .groupBy("image_id")
                 .agg(F.count("*").alias("fanin"))
             )

@@ -178,18 +178,25 @@ def _rdd(df: DataFrame) -> Any:
     return df._jdf.queryExecution().analyzed().rdd()
 
 
-class TilesSnapshot:
-    """One materialized tiles table (``leaf``) and the query-independent
-    structures derived from it (the kNN index, operators/knn.py).
+def _checkpoint(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
-    A derived structure is built on first use, once per key, under this
-    snapshot's lock: concurrent first callers wait for the one build.
-    Its materialized frames are released with the leaf. After release a
-    builder still runs, but its frames stay lazy and are not kept."""
 
-    def __init__(self, leaf: DataFrame):
-        self.leaf = leaf
-        self._rdds = [_rdd(leaf)]
+class Snapshot:
+    """One materialized table (``leaf``: a tiles snapshot or the zone
+    layer) and the query-independent structures derived from it (the
+    kNN index, operators/knn.py; the zone covers, operators/pip_join.py).
+
+    ``plan`` is checkpointed eagerly into ``leaf`` (memory, spilling to
+    disk). A derived structure is built on first use, once per key,
+    under this snapshot's lock: concurrent first callers wait for the
+    one build. Its materialized frames are released with the leaf.
+    After release a builder still runs, but its frames stay lazy and
+    are not kept."""
+
+    def __init__(self, plan: DataFrame):
+        self.leaf = _checkpoint(plan)
+        self._rdds = [_rdd(self.leaf)]
         self._derived: dict[Any, Any] = {}
         self._lock = threading.Lock()
         self._released = False
@@ -205,8 +212,7 @@ class TilesSnapshot:
             return self._derived[key]
 
     def _keep(self, df: DataFrame) -> DataFrame:
-        kept = df.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+        kept = _checkpoint(df)
         self._rdds.append(_rdd(kept))
         return kept
 
@@ -219,24 +225,28 @@ class TilesSnapshot:
 
 
 # Materialized tiles snapshots, least recently used first: (application
-# id, real path, st_size, st_mtime_ns, amplify, dense) -> snapshot.
+# id, real path, st_size, st_mtime_ns, amplify, dense) -> snapshot. The
+# zone layer reads no file: one snapshot per application id, outside
+# the LRU, so no tiles build can evict it. One lock guards both.
 TILES_CACHE_SLOTS = 4
-_tiles_cache: OrderedDict[tuple, TilesSnapshot] = OrderedDict()
-_tiles_lock = threading.Lock()
+_tiles_cache: OrderedDict[tuple, Snapshot] = OrderedDict()
+_zones_cache: dict[str, Snapshot] = {}
+_cache_lock = threading.Lock()
 
 
 def drop_tiles_cache() -> None:
     """Release every materialized tiles table."""
-    with _tiles_lock:
+    with _cache_lock:
         while _tiles_cache:
             _tiles_cache.popitem()[1].release()
 
 
-def tiles_snapshot(df: DataFrame) -> TilesSnapshot | None:
+def snapshot(df: DataFrame) -> Snapshot | None:
     """The cached snapshot whose leaf ``df`` is, or None (a derived
     frame, or a leaf already released)."""
-    with _tiles_lock:
-        return next((s for s in _tiles_cache.values() if s.leaf is df), None)
+    with _cache_lock:
+        return next((s for s in (*_tiles_cache.values(), *_zones_cache.values())
+                     if s.leaf is df), None)
 
 
 def tiles_df(
@@ -252,7 +262,7 @@ def tiles_df(
     checkpointed blocks (memory, spilling to disk); every later call gets
     the same one-leaf DataFrame, so downstream plans neither re-read the
     seed nor re-analyze the LCG expressions. Only this base table and the
-    query-independent structures derived from it (``TilesSnapshot``) are
+    query-independent structures derived from it (``Snapshot``) are
     reused: every query still plans and runs its own joins and
     aggregates, and no query result is kept.
 
@@ -278,23 +288,19 @@ def tiles_df(
     app = spark.sparkContext.applicationId
     real = os.path.realpath(f"{sf_dir}/orders.parquet")
     st = os.stat(real)
-    snapshot = (real, st.st_size, st.st_mtime_ns)
-    key = (app, *snapshot, amplify, dense)
-    with _tiles_lock:
+    stamp = (real, st.st_size, st.st_mtime_ns)
+    key = (app, *stamp, amplify, dense)
+    with _cache_lock:
         snap = _tiles_cache.get(key)
         if snap is None:
             # entries of a stopped context are gone with it; an older
             # snapshot of the same file can never be asked for again
             for k in [k for k in _tiles_cache if k[0] != app]:
                 del _tiles_cache[k]
-            for k in [k for k in _tiles_cache if k[1] == real and k[1:4] != snapshot]:
+            for k in [k for k in _tiles_cache if k[1] == real and k[1:4] != stamp]:
                 _tiles_cache.pop(k).release()
-            snap = TilesSnapshot(
-                tiles_plan(spark, sf_dir, amplify, dense).localCheckpoint(
-                    eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-                )
-            )
-            _tiles_cache[key] = snap
+            snap = _tiles_cache[key] = Snapshot(
+                tiles_plan(spark, sf_dir, amplify, dense))
             while len(_tiles_cache) > TILES_CACHE_SLOTS:
                 _tiles_cache.popitem(last=False)[1].release()
         else:
@@ -336,11 +342,29 @@ def zones_sql() -> str:
     return f"SELECT\n  j,\n  {cols}\nFROM range({N_ZONES}) AS t(j)"
 
 
-def zones_df(spark: SparkSession) -> DataFrame:
+def zones_plan(spark: SparkSession) -> DataFrame:
+    """The lazy plan ``zones_df`` materializes: ``range(N_ZONES)`` under
+    the LCG projection of ``zone_exprs``."""
     return spark.range(N_ZONES).select(
         F.col("id").alias("j"),
         *[F.expr(f"{e} AS {n}") for n, e in zone_exprs("id").items()],
     )
+
+
+def zones_df(spark: SparkSession) -> DataFrame:
+    """The zone layer, served as one materialized leaf per SparkContext:
+    every call returns the same one-leaf DataFrame, so plans over it
+    neither re-analyze the LCG expressions nor rerun them. Its
+    ``Snapshot`` also holds the layer's query-independent structures
+    (``pip_join.zone_cover`` keeps one cover per resolution there), is
+    never evicted by tiles builds, and is dropped with its context."""
+    app = spark.sparkContext.applicationId
+    with _cache_lock:
+        snap = _zones_cache.get(app)
+        if snap is None:
+            _zones_cache.clear()  # a stopped context's entry is gone with it
+            snap = _zones_cache[app] = Snapshot(zones_plan(spark))
+    return snap.leaf
 
 
 # ---------------------------------------------------------------------------
