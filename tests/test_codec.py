@@ -15,6 +15,8 @@ from hypothesis import strategies as st
 from tree_sitter_analyzer_spark import grid
 from tree_sitter_analyzer_spark.sources import codec
 
+from .conftest import SF_TINY
+
 
 @given(st.integers(0, 10**9), st.sampled_from([16, 32, 64, 128]),
        st.sampled_from([16, 32, 64, 128]))
@@ -64,10 +66,12 @@ def test_grid_parent_consistency(lon, lat, res):
 
 def test_ingest_pipeline_invariants(spark):
     """Full extraction at sf0.001: zero decode failures, zero PSNR or
-    caption violations — the audit job with target 0 (SURVEY.md §5.9)."""
+    caption violations — the audit job with target 0 (SURVEY.md §5.9) —
+    and, on a sample of both formats, each tile's decode stats equal a
+    local numpy replay of synthesize → encode → decode."""
     from tree_sitter_analyzer_spark.operators import ingest
 
-    ext = ingest.extract_tiles(spark, "/root/testdata/sf0.001", amplify=1)
+    ext = ingest.extract_tiles(spark, SF_TINY)
     summary = ingest.ingest_summary(ext).collect()
     assert len(summary) == 2  # png + jpeg
     for row in summary:
@@ -76,6 +80,22 @@ def test_ingest_pipeline_invariants(spark):
         assert row["n_caption_violations"] == 0, row
         if row["fmt"] == "jpeg":
             assert row["min_psnr_db"] >= 40.0
+
+    sample = (
+        ext.where("i % 97 < 5")
+        .select("image_id", "w", "h", "fmt", "decoded_ok", "px_mean",
+                "px_std", "pixel_phash", "psnr_db")
+        .collect()
+    )
+    assert {r["fmt"] for r in sample} == {"png", "jpeg"}
+    for r in sample:
+        orig = codec.synth_pixels(r["image_id"], r["w"], r["h"])
+        px = codec.decode_px(codec.encode_px(orig, r["fmt"]))
+        assert r["decoded_ok"] is (px.shape == orig.shape)
+        assert r["px_mean"] == float(px.mean())
+        assert r["px_std"] == float(px.std())
+        assert r["pixel_phash"] == codec.phash64(px)
+        assert r["psnr_db"] == codec.psnr(orig, px)
 
 
 def test_spark_cell_matches_numpy_oracle(spark):

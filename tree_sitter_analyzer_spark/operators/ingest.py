@@ -6,13 +6,13 @@ backfills. Here: tiles table → Arrow-batched decode+verify+phash
 extraction (sources/codec.py) → grid-cell encode → per-zone assignment →
 summary/audit rows.
 
-This is the job the scaling bench measures: per-row vectorized pixel
-compute dominates, so throughput scales with cores — the honest stand-in
-for the north rule's N→4N cluster criterion. It is also the only pipeline
-that touches ``bytes``; per-row invariants (PSNR ≥ 40 dB lossy, exact for
-lossless, caption untouched) are enforced as *columns*, so a violation is
-a queryable fact, not a buried assertion (the miswire-audit pattern,
-SURVEY.md §5.9 — target violation count: 0).
+Per-row vectorized pixel compute dominates, so throughput scales with
+cores; ``perfbench``'s ``incremental_sync`` workload runs it on every
+delta batch. It is also the only pipeline that touches ``bytes``; per-row
+invariants (PSNR ≥ 40 dB lossy, exact for lossless, caption untouched)
+are enforced as *columns*, so a violation is a queryable fact, not a
+buried assertion (the miswire-audit pattern, SURVEY.md §5.9 — target
+violation count: 0).
 """
 
 from __future__ import annotations
@@ -26,9 +26,7 @@ from ..sources import codec
 PSNR_GATE_DB = 40.0
 
 
-def extract_tiles(
-    spark: SparkSession, sf_dir: str, res: int = 9, amplify: int | None = None
-) -> DataFrame:
+def extract_tiles(spark: SparkSession, sf_dir: str, res: int = 9) -> DataFrame:
     """tiles(+bytes) → decoded pixel stats + cell index, one map-side pass.
 
     No shuffle past the seed spread: synth → encode → decode → phash →
@@ -38,10 +36,9 @@ def extract_tiles(
     of changed tiles neither builds a snapshot nor evicts a serving one
     from ``synth.tiles_df``'s cache.
     """
-    t = synth.tiles_plan(spark, sf_dir, amplify)
-    # Fused synth→encode→decode→verify (one Arrow pass); production with
-    # real stored bytes would use decode_stats(tiles_with_bytes) instead.
-    t = codec.synth_decode_stats_fused(t)
+    # Fused synth→encode→decode→verify (one Arrow pass); stored bytes
+    # would change only the row function's first two lines.
+    t = codec.synth_decode_stats_fused(synth.tiles_plan(spark, sf_dir))
     return (
         t.withColumn("cell", grid.cell_col("lon", "lat", res))
         .withColumn(

@@ -554,8 +554,8 @@ def q_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = multimodal.video_frame_features(
         multimodal.attach_video_bytes(clips), every_n=10
     )
-    # "decoder" records which decode path ran (fake stand-in vs real
-    # ffmpeg) so the driver gate's rows show it explicitly.
+    # "decoder" records the decode path ('real') so the result rows show
+    # it explicitly.
     return feats.groupBy("codec", "decoder").agg(
         F.count("*").alias("n_clips"),
         F.sum("n_sampled_frames").cast("bigint").alias("n_sampled_frames"),

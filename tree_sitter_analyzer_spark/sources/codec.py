@@ -4,7 +4,7 @@ The container ships no image library (PIL/cv2 absent), so per FIXTURES.md
 and the task brief the *codec* is a clearly-marked deterministic fake while
 all Spark-side plumbing — schema, Arrow batching, UDF signatures, batch
 shapes — is real and tested. Swapping in libjpeg/libpng later changes ONLY
-``_encode_px`` / ``_decode_px``.
+``encode_px`` / ``decode_px``.
 
 Formats (both carry a 12-byte header: magic, w, h):
 - ``png``  — GPNG: lossless, raw uint8 HxWx3 payload. decode(encode(x)) == x.
@@ -18,8 +18,9 @@ Pixels themselves are synthesized per image_id (seeded Philox) as smooth
 gradients + noise (FIXTURES.md §1). phash is an 8×8 average-hash over a
 box-downsampled grayscale — 64-bit, pure numpy.
 
-Everything is ``mapInPandas``/pandas-UDF (Arrow batches) — no per-row
-Python (input_hint). This module is the engine's "extraction worker"
+Every per-row media pass in ``sources/`` is a row function handed to
+``map_rows``, the one ``mapInPandas`` call (Arrow batches in, scalar
+columns out). This module is the engine's "extraction worker"
 (``ast_cache.py:581-593`` — spawn-pool ``_worker_index_file``): the
 reference parses source files in parallel workers; we decode/encode tiles
 in parallel Arrow batches.
@@ -28,6 +29,7 @@ in parallel Arrow batches.
 from __future__ import annotations
 
 import struct
+from collections.abc import Callable
 from functools import lru_cache
 
 import numpy as np
@@ -123,119 +125,88 @@ def phash64(px: np.ndarray) -> int:
 # Spark layer — Arrow-batched, schema-typed
 # ---------------------------------------------------------------------------
 
-def attach_bytes(df: DataFrame) -> DataFrame:
-    """Add the ``bytes`` payload column: encode synthetic pixels per row.
+def map_rows(
+    df: DataFrame,
+    reads: list[str],
+    fields: list[StructField],
+    fn: Callable[..., tuple],
+    keep: list[str] | None = None,
+) -> DataFrame:
+    """The per-row media pass: ``fn(*row)`` over the ``reads`` columns of
+    each row returns one value per output field.
 
-    mapInPandas keeps batches Arrow-shaped; per-batch loop is over rows of
-    a numpy-backed frame doing pure-numpy work (the heavy axis — pixels —
-    is vectorized; the per-image loop is unavoidable for variable shapes,
-    exactly like any real image codec call).
+    Output is the ``keep`` columns (default: every input column not named
+    by a field) followed by ``fields``. Only the read and kept columns
+    cross into the Arrow batches. The loop over rows is unavoidable for
+    variable-shaped payloads, exactly like any real codec call; the heavy
+    axis (pixels, samples) is vectorized inside ``fn``.
     """
-    # StructType.add mutates in place — never touch df.schema directly.
-    schema = StructType(
-        list(df.schema.fields) + [StructField("bytes", BinaryType())]
-    )
+    names = [f.name for f in fields]
+    if keep is None:
+        keep = [c for c in df.columns if c not in names]
+    cols = list(dict.fromkeys([*keep, *reads]))
+    if cols != df.columns:
+        df = df.select(*cols)
+    schema = StructType([df.schema[c] for c in keep] + fields)
 
     def gen(batches):
         for pdf in batches:
-            out = []
-            for iid, w, h, fmt in zip(
-                pdf["image_id"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                out.append(encode_px(synth_pixels(iid, int(w), int(h)), fmt))
-            pdf = pdf.copy()
-            pdf["bytes"] = out
-            yield pdf
+            out = pd.DataFrame(
+                [fn(*row) for row in zip(*(pdf[c] for c in reads))],
+                columns=names,
+                index=pdf.index,
+            )
+            yield pd.concat([pdf[keep], out], axis=1)
 
     return df.mapInPandas(gen, schema=schema)
 
 
-def decode_stats(df: DataFrame) -> DataFrame:
-    """The extraction pass: decode bytes → verify → per-tile pixel stats.
+def attach_bytes(df: DataFrame) -> DataFrame:
+    """Add the ``bytes`` payload column: encode synthetic pixels per row."""
+    return map_rows(
+        df,
+        ["image_id", "w", "h", "fmt"],
+        [StructField("bytes", BinaryType())],
+        lambda iid, w, h, fmt: (
+            encode_px(synth_pixels(iid, int(w), int(h)), fmt),
+        ),
+    )
+
+
+def synth_decode_stats_fused(df: DataFrame) -> DataFrame:
+    """The extraction pass: synthesize → encode → decode → verify in ONE
+    Arrow pass, so the bytes payload never round-trips through Arrow.
 
     Adds: decoded_ok, px_mean, px_std, pixel_phash (recomputed from the
     decoded pixels), psnr_db (decoded vs the deterministic original —
     the per-row invariant of input_hint: allclose for png ⇒ psnr=inf,
-    ≥40 dB for jpeg).
+    ≥40 dB for jpeg). A table of real stored bytes would change only
+    the first two lines of the row function.
     """
-    extra = [
-        StructField("decoded_ok", BooleanType()),
-        StructField("px_mean", DoubleType()),
-        StructField("px_std", DoubleType()),
-        StructField("pixel_phash", LongType()),
-        StructField("psnr_db", DoubleType()),
-    ]
-    schema = StructType(list(df.schema.fields) + extra)
 
-    def gen(batches):
-        for pdf in batches:
-            ok, mean, std, ph, ps = [], [], [], [], []
-            for iid, w, h, buf in zip(
-                pdf["image_id"], pdf["w"], pdf["h"], pdf["bytes"]
-            ):
-                try:
-                    px = decode_px(buf)
-                    orig = synth_pixels(iid, int(w), int(h))
-                    ok.append(bool(px.shape == orig.shape))
-                    mean.append(float(px.mean()))
-                    std.append(float(px.std()))
-                    ph.append(phash64(px))
-                    ps.append(psnr(orig, px))
-                except Exception:
-                    ok.append(False)
-                    mean.append(float("nan"))
-                    std.append(float("nan"))
-                    ph.append(0)
-                    ps.append(float("nan"))
-            pdf = pdf.copy()
-            pdf["decoded_ok"] = ok
-            pdf["px_mean"] = mean
-            pdf["px_std"] = std
-            pdf["pixel_phash"] = pd.array(ph, dtype="int64")
-            pdf["psnr_db"] = ps
-            yield pdf
+    def row(iid, w, h, fmt):
+        orig = synth_pixels(iid, int(w), int(h))
+        px = decode_px(encode_px(orig, fmt))
+        return (
+            bool(px.shape == orig.shape),
+            float(px.mean()),
+            float(px.std()),
+            phash64(px),
+            psnr(orig, px),
+        )
 
-    return df.mapInPandas(gen, schema=schema)
-
-
-def synth_decode_stats_fused(df: DataFrame) -> DataFrame:
-    """Fused fixture+extraction pass for the ingest pipeline: synthesize →
-    encode → decode → verify in ONE mapInPandas, so the bytes payload never
-    round-trips through Arrow twice. Identical semantics to
-    ``decode_stats(attach_bytes(df))`` minus the ``bytes`` output column
-    (production would read real bytes from the table and use
-    ``decode_stats`` directly)."""
-    extra = [
-        StructField("decoded_ok", BooleanType()),
-        StructField("px_mean", DoubleType()),
-        StructField("px_std", DoubleType()),
-        StructField("pixel_phash", LongType()),
-        StructField("psnr_db", DoubleType()),
-    ]
-    schema = StructType(list(df.schema.fields) + extra)
-
-    def gen(batches):
-        for pdf in batches:
-            ok, mean, std, ph, ps = [], [], [], [], []
-            for iid, w, h, fmt in zip(
-                pdf["image_id"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                orig = synth_pixels(iid, int(w), int(h))
-                px = decode_px(encode_px(orig, fmt))
-                ok.append(bool(px.shape == orig.shape))
-                mean.append(float(px.mean()))
-                std.append(float(px.std()))
-                ph.append(phash64(px))
-                ps.append(psnr(orig, px))
-            pdf = pdf.copy()
-            pdf["decoded_ok"] = ok
-            pdf["px_mean"] = mean
-            pdf["px_std"] = std
-            pdf["pixel_phash"] = pd.array(ph, dtype="int64")
-            pdf["psnr_db"] = ps
-            yield pdf
-
-    return df.mapInPandas(gen, schema=schema)
+    return map_rows(
+        df,
+        ["image_id", "w", "h", "fmt"],
+        [
+            StructField("decoded_ok", BooleanType()),
+            StructField("px_mean", DoubleType()),
+            StructField("px_std", DoubleType()),
+            StructField("pixel_phash", LongType()),
+            StructField("psnr_db", DoubleType()),
+        ],
+        row,
+    )
 
 
 def crop_stats(df: DataFrame, x0: int, y0: int, x1: int, y1: int) -> DataFrame:
@@ -243,32 +214,27 @@ def crop_stats(df: DataFrame, x0: int, y0: int, x1: int, y1: int) -> DataFrame:
     slicing, pixel form): decode only the requested pixel window and emit
     its stats. Out-of-range windows clamp to the image (the reference
     clamps line ranges the same way)."""
-    extra = [
-        StructField("crop_w", LongType()),
-        StructField("crop_h", LongType()),
-        StructField("crop_mean", DoubleType()),
-    ]
-    schema = StructType(list(df.schema.fields) + extra)
 
-    def gen(batches):
-        for pdf in batches:
-            cw, ch, cm = [], [], []
-            for buf in pdf["bytes"]:
-                px = decode_px(buf)
-                h, w = px.shape[:2]
-                ax0, ay0 = min(x0, w), min(y0, h)
-                ax1, ay1 = min(x1, w), min(y1, h)
-                win = px[ay0:ay1, ax0:ax1]
-                cw.append(int(win.shape[1]))
-                ch.append(int(win.shape[0]))
-                cm.append(float(win.mean()) if win.size else 0.0)
-            pdf = pdf.copy()
-            pdf["crop_w"] = pd.array(cw, dtype="int64")
-            pdf["crop_h"] = pd.array(ch, dtype="int64")
-            pdf["crop_mean"] = cm
-            yield pdf
+    def row(buf):
+        px = decode_px(buf)
+        h, w = px.shape[:2]
+        win = px[min(y0, h):min(y1, h), min(x0, w):min(x1, w)]
+        return (
+            int(win.shape[1]),
+            int(win.shape[0]),
+            float(win.mean()) if win.size else 0.0,
+        )
 
-    return df.mapInPandas(gen, schema=schema)
+    return map_rows(
+        df,
+        ["bytes"],
+        [
+            StructField("crop_w", LongType()),
+            StructField("crop_h", LongType()),
+            StructField("crop_mean", DoubleType()),
+        ],
+        row,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -327,32 +293,24 @@ _FEATURE_FIELDS = [
 
 
 def synth_pixel_features_fused(df: DataFrame) -> DataFrame:
-    """Fused synthesize → encode → decode → feature pass (one mapInPandas,
-    same single-Arrow-hop discipline as synth_decode_stats_fused): emits
-    the integer feature columns for each tile. Production path decodes
-    real ``bytes`` instead of synthesizing — only the first two lines of
-    the row loop change."""
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField(f, LongType()) for f in _FEATURE_FIELDS]
+    """Fused synthesize → encode → decode → feature pass (one Arrow pass,
+    same single-hop discipline as synth_decode_stats_fused): emits the
+    integer feature columns for each tile. Production path decodes real
+    ``bytes`` instead of synthesizing — only the first line of the row
+    function changes."""
+
+    def row(iid, w, h, fmt):
+        feats = pixel_feature_row(
+            decode_px(encode_px(synth_pixels(iid, int(w), int(h)), fmt))
+        )
+        return tuple(feats[f] for f in _FEATURE_FIELDS)
+
+    return map_rows(
+        df,
+        ["image_id", "w", "h", "fmt"],
+        [StructField(f, LongType()) for f in _FEATURE_FIELDS],
+        row,
     )
-
-    def gen(batches):
-        for pdf in batches:
-            cols = {f: [] for f in _FEATURE_FIELDS}
-            for iid, w, h, fmt in zip(
-                pdf["image_id"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                px = decode_px(encode_px(synth_pixels(iid, int(w), int(h)), fmt))
-                feats = pixel_feature_row(px)
-                for f in _FEATURE_FIELDS:
-                    cols[f].append(feats[f])
-            pdf = pdf.copy()
-            for f in _FEATURE_FIELDS:
-                pdf[f] = pd.array(cols[f], dtype="int64")
-            yield pdf
-
-    return df.mapInPandas(gen, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -373,37 +331,28 @@ def pair_pixel_verify(pairs_with_bytes: DataFrame) -> DataFrame:
     """(image_a, image_b, hamming, n_subpx, sse, mse_milli, psnr40_ok,
     verdict) per candidate pair — exact integer pixel comparison.
     verdict: exact | near40 | differs | shape_mismatch."""
-    schema = StructType([
-        StructField("image_a", StringType()),
-        StructField("image_b", StringType()),
-        StructField("hamming", LongType()),
-        StructField("n_subpx", LongType()),
-        StructField("sse", LongType()),
-        StructField("mse_milli", LongType()),
-        StructField("psnr40_ok", BooleanType()),
-        StructField("verdict", StringType()),
-    ])
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for ia, ib, ham, ba, bb in zip(
-                pdf["image_a"], pdf["image_b"], pdf["hamming"],
-                pdf["bytes_a"], pdf["bytes_b"],
-            ):
-                pa, pb = decode_px(ba), decode_px(bb)
-                if pa.shape != pb.shape:
-                    rows.append((ia, ib, int(ham), 0, 0, -1, False,
-                                 "shape_mismatch"))
-                    continue
-                d = pa.astype(np.int64) - pb.astype(np.int64)
-                sse = int((d * d).sum())
-                n = int(pa.size)
-                ok = 400 * sse <= 2601 * n
-                verdict = ("exact" if sse == 0
-                           else ("near40" if ok else "differs"))
-                rows.append((ia, ib, int(ham), n, sse,
-                             1000 * sse // n, ok, verdict))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def row(ba, bb):
+        pa, pb = decode_px(ba), decode_px(bb)
+        if pa.shape != pb.shape:
+            return 0, 0, -1, False, "shape_mismatch"
+        d = pa.astype(np.int64) - pb.astype(np.int64)
+        sse = int((d * d).sum())
+        n = int(pa.size)
+        ok = 400 * sse <= 2601 * n
+        verdict = "exact" if sse == 0 else ("near40" if ok else "differs")
+        return n, sse, 1000 * sse // n, ok, verdict
 
-    return pairs_with_bytes.mapInPandas(gen, schema=schema)
+    return map_rows(
+        pairs_with_bytes,
+        ["bytes_a", "bytes_b"],
+        [
+            StructField("n_subpx", LongType()),
+            StructField("sse", LongType()),
+            StructField("mse_milli", LongType()),
+            StructField("psnr40_ok", BooleanType()),
+            StructField("verdict", StringType()),
+        ],
+        row,
+        keep=["image_a", "image_b", "hamming"],
+    )

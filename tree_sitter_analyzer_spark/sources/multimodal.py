@@ -16,9 +16,9 @@ pandas UDFs over ``mapInPandas``. All three decode paths are real:
 
 This matches the reference's extractor discipline — every format it
 claims, it actually parses (``ast_cache.py:581-593``'s per-language
-workers). The deterministic ``_fake_*`` generators remain available
-(``use_fake_decoder=True``) for plumbing tests that construct metadata
-without payload bytes.
+workers). Every pass here is a row function handed to ``codec.map_rows``;
+the per-kind image stats reduce each decoded tile to a few integers
+there and roll them up with one ``groupBy``.
 """
 
 from __future__ import annotations
@@ -26,27 +26,20 @@ from __future__ import annotations
 import io
 import struct
 import wave
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
-from .codec import decode_px, encode_px
-
-# Both decoders now have real bodies (stdlib wave + the GVID container) —
-# ``use_fake_decoder=False`` is the production path. The flag stays as the
-# documented plug-point switch: a port to a container with ffmpeg would
-# extend decode_* with more codecs, not change the pipeline.
-REAL_DECODERS_IMPLEMENTED = True
+from .codec import decode_px, encode_px, map_rows
 
 
 # ---------------------------------------------------------------------------
@@ -60,34 +53,24 @@ def resize_tiles(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     executors, no interpolation-library variance (the pinned-libjpeg
     lesson, SURVEY.md §7.3).
     """
-    schema = StructType(
-        list(df.schema.fields)
-        + [
+
+    def row(buf):
+        px = decode_px(buf)
+        h, w = px.shape[:2]
+        yi = np.minimum((np.arange(out_h) * h) // out_h, h - 1)
+        xi = np.minimum((np.arange(out_w) * w) // out_w, w - 1)
+        return encode_px(px[yi][:, xi], "png"), out_w, out_h
+
+    return map_rows(
+        df,
+        ["bytes"],
+        [
             StructField("resized_bytes", BinaryType()),
             StructField("resized_w", IntegerType()),
             StructField("resized_h", IntegerType()),
-        ]
+        ],
+        row,
     )
-
-    def gen(batches):
-        for pdf in batches:
-            out, ws, hs = [], [], []
-            for buf in pdf["bytes"]:
-                px = decode_px(buf)
-                h, w = px.shape[:2]
-                yi = np.minimum((np.arange(out_h) * h) // out_h, h - 1)
-                xi = np.minimum((np.arange(out_w) * w) // out_w, w - 1)
-                small = px[yi][:, xi]
-                out.append(encode_px(small, "png"))
-                ws.append(out_w)
-                hs.append(out_h)
-            pdf = pdf.copy()
-            pdf["resized_bytes"] = out
-            pdf["resized_w"] = pd.array(ws, dtype="int32")
-            pdf["resized_h"] = pd.array(hs, dtype="int32")
-            yield pdf
-
-    return df.mapInPandas(gen, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -225,21 +208,7 @@ def decode_video_frames(buf: bytes, every_n: int) -> np.ndarray:
     return np.stack(out)
 
 
-def _fake_samples(media_id: int, n: int) -> np.ndarray:
-    """Deterministic stand-in waveform so the feature-extraction pipeline
-    is testable end-to-end without a codec library."""
-    rng = np.random.Generator(np.random.Philox(int(media_id)))
-    return rng.standard_normal(n).astype(np.float32)
-
-
-def _fake_frames(media_id: int, n_frames: int, w: int, h: int,
-                 every_n: int) -> np.ndarray:
-    """Deterministic stand-in frame stack (every_n-th frame of an n_frames
-    clip) so the frame-sampling pipeline is testable end-to-end without
-    ffmpeg. Shape: (ceil(n_frames/every_n), h, w) uint8 luma."""
-    idx = np.arange(0, n_frames, every_n)
-    rng = np.random.Generator(np.random.Philox(int(media_id)))
-    return rng.integers(0, 256, size=(len(idx), h, w), dtype=np.uint8)
+_BYTES = [StructField("bytes", BinaryType())]
 
 
 def attach_video_bytes(df: DataFrame, fmt: str = "png") -> DataFrame:
@@ -247,145 +216,107 @@ def attach_video_bytes(df: DataFrame, fmt: str = "png") -> DataFrame:
     each row's metadata (deterministic per media_id) — the video analog of
     ``codec.attach_bytes``. Production reads real bytes from the table and
     skips this step."""
-    schema = StructType(list(df.schema.fields))
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for mid, nf, w, h, fps in zip(
-                pdf["media_id"], pdf["n_frames"], pdf["width"],
-                pdf["height"], pdf["fps_milli"]
-            ):
-                frames = [
-                    synth_video_px(int(mid), f, int(w), int(h))
-                    for f in range(int(nf))
-                ]
-                out.append(encode_video(frames, int(fps), fmt))
-            pdf = pdf.copy()
-            pdf["bytes"] = out
-            yield pdf
+    def row(mid, nf, w, h, fps):
+        frames = [
+            synth_video_px(int(mid), f, int(w), int(h)) for f in range(int(nf))
+        ]
+        return (encode_video(frames, int(fps), fmt),)
 
-    return df.mapInPandas(gen, schema=schema)
+    return map_rows(
+        df,
+        ["media_id", "n_frames", "width", "height", "fps_milli"],
+        _BYTES,
+        row,
+    ).select(*df.columns)
 
 
 def attach_audio_bytes(df: DataFrame) -> DataFrame:
     """Fill the ``bytes`` column with a REAL PCM16 WAV payload synthesized
     from each row's metadata (deterministic per media_id)."""
-    schema = StructType(list(df.schema.fields))
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for mid, sr, dur in zip(
-                pdf["media_id"], pdf["sample_rate"], pdf["duration_ms"]
-            ):
-                out.append(
-                    encode_wav(synth_audio_i16(int(mid), int(sr), int(dur)),
-                               int(sr))
-                )
-            pdf = pdf.copy()
-            pdf["bytes"] = out
-            yield pdf
-
-    return df.mapInPandas(gen, schema=schema)
+    return map_rows(
+        df,
+        ["media_id", "sample_rate", "duration_ms"],
+        _BYTES,
+        lambda mid, sr, dur: (
+            encode_wav(synth_audio_i16(int(mid), int(sr), int(dur)), int(sr)),
+        ),
+    ).select(*df.columns)
 
 
-def video_frame_features(
-    df: DataFrame, every_n: int = 10, use_fake_decoder: bool = False
-) -> DataFrame:
-    """Frame-sampling pipeline: decode every ``every_n``-th frame, emit
-    per-clip sampled-frame count + mean/std luma (the training-data
-    "frame-sample" op). The default path REALLY parses the ``bytes``
-    column (GVID container, length-prefix seeking); ``use_fake_decoder=
-    True`` synthesizes a stand-in luma stack from metadata alone (for
-    plumbing tests with no payload).
+def video_frame_features(df: DataFrame, every_n: int = 10) -> DataFrame:
+    """Frame-sampling pipeline: decode every ``every_n``-th frame of the
+    ``bytes`` column (GVID container, length-prefix seeking), emit per-clip
+    sampled-frame count + mean/std luma (the training-data "frame-sample"
+    op). The ``decoder`` column records the decode path: always 'real'.
 
-    Batch shape: one Arrow batch in → same rows out + 3 columns; frames
+    Batch shape: one Arrow batch in → same rows out + 4 columns; frames
     never leave the executor (only scalar features cross the wire), which
     is what keeps this viable at 10^12 clips.
     """
-    decoder_tag = "fake" if use_fake_decoder else "real"
-    schema = StructType(
-        list(df.schema.fields)
-        + [
+
+    def row(buf):
+        frames = decode_video_frames(buf, every_n)
+        # zero-length clips (or all frames skipped) must not poison the
+        # batch: emit zeros, not NaN
+        if frames.size == 0:
+            return frames.shape[0], 0, 0
+        return (
+            frames.shape[0],
+            int(frames.mean() * 1000),
+            int(frames.std() * 1000),
+        )
+
+    return map_rows(
+        df,
+        ["bytes"],
+        [
             StructField("n_sampled_frames", LongType()),
             StructField("mean_luma_milli", LongType()),
             StructField("std_luma_milli", LongType()),
-            StructField("decoder", StringType()),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            ns, mean_l, std_l = [], [], []
-            for mid, nf, w, h, buf in zip(
-                pdf["media_id"], pdf["n_frames"], pdf["width"],
-                pdf["height"], pdf["bytes"]
-            ):
-                if use_fake_decoder:
-                    frames = _fake_frames(int(mid), int(nf), int(w), int(h),
-                                          every_n)
-                else:
-                    frames = decode_video_frames(buf, every_n)
-                ns.append(frames.shape[0])
-                # zero-length clips (or all frames skipped) must not poison
-                # the batch: emit zeros, not NaN
-                if frames.size == 0:
-                    mean_l.append(0)
-                    std_l.append(0)
-                else:
-                    mean_l.append(int(frames.mean() * 1000))
-                    std_l.append(int(frames.std() * 1000))
-            pdf = pdf.copy()
-            pdf["n_sampled_frames"] = pd.array(ns, dtype="int64")
-            pdf["mean_luma_milli"] = pd.array(mean_l, dtype="int64")
-            pdf["std_luma_milli"] = pd.array(std_l, dtype="int64")
-            pdf["decoder"] = decoder_tag
-            yield pdf
-
-    return df.mapInPandas(gen, schema=schema)
+        ],
+        row,
+    ).withColumn("decoder", F.lit("real"))
 
 
-def audio_features(df: DataFrame, use_fake_decoder: bool = False) -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """Per-clip features: RMS energy + zero-crossing count over the first
-    second. The default path REALLY parses the ``bytes`` column (PCM16
-    WAV via the stdlib reader), trusting the decoded header's sample rate
-    for the one-second window; ``use_fake_decoder=True`` synthesizes a
-    stand-in waveform from metadata alone."""
-    decoder_tag = "fake" if use_fake_decoder else "real"
-    schema = StructType(
-        list(df.schema.fields)
-        + [
+    second. Parses the ``bytes`` column (PCM16 WAV via the stdlib reader),
+    trusting the decoded header's sample rate for the one-second window.
+    The ``decoder`` column records the decode path: always 'real'."""
+
+    def row(buf):
+        x, rate = decode_audio(buf)
+        x = x[:rate]  # first second, per the DECODED header
+        if x.size == 0:  # zero-rate/empty clip: zeros, not NaN
+            return 0, 0
+        return (
+            int(np.sqrt(np.mean(x * x)) * 1000),
+            int(np.sum(np.abs(np.diff(np.signbit(x))))),
+        )
+
+    return map_rows(
+        df,
+        ["bytes"],
+        [
             StructField("rms_milli", LongType()),
             StructField("zero_crossings", LongType()),
-            StructField("decoder", StringType()),
-        ]
+        ],
+        row,
+    ).withColumn("decoder", F.lit("real"))
+
+
+def _per_tile(
+    df: DataFrame, features_np: Callable[[np.ndarray], tuple], names: list[str]
+) -> DataFrame:
+    """(tile_kind, *names): ``features_np`` of each decoded tile."""
+    return map_rows(
+        df,
+        ["bytes"],
+        [StructField(n, LongType()) for n in names],
+        lambda buf: features_np(decode_px(buf)),
+        keep=["tile_kind"],
     )
-
-    def gen(batches):
-        for pdf in batches:
-            rms, zc = [], []
-            for mid, sr, buf in zip(
-                pdf["media_id"], pdf["sample_rate"], pdf["bytes"]
-            ):
-                if use_fake_decoder:
-                    x = _fake_samples(int(mid), int(sr))
-                else:
-                    x, rate = decode_audio(buf)
-                    x = x[:rate]  # first second, per the DECODED header
-                if x.size == 0:  # zero-rate/empty clip: zeros, not NaN
-                    rms.append(0)
-                    zc.append(0)
-                else:
-                    rms.append(int(np.sqrt(np.mean(x * x)) * 1000))
-                    zc.append(int(np.sum(np.abs(np.diff(np.signbit(x))))))
-            pdf = pdf.copy()
-            pdf["rms_milli"] = pd.array(rms, dtype="int64")
-            pdf["zero_crossings"] = pd.array(zc, dtype="int64")
-            pdf["decoder"] = decoder_tag
-            yield pdf
-
-    return df.mapInPandas(gen, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -401,13 +332,7 @@ def audio_features(df: DataFrame, use_fake_decoder: bool = False) -> DataFrame:
 # the batch; only 5 integers per tile leave the worker.
 # ---------------------------------------------------------------------------
 
-GLCM_SCHEMA_FIELDS = [
-    StructField("tile_kind", StringType()),
-    StructField("n_pairs", LongType()),
-    StructField("contrast", LongType()),
-    StructField("energy", LongType()),
-    StructField("hom_milli", LongType()),
-]
+GLCM_SCHEMA_FIELDS = ["n_pairs", "contrast", "energy", "hom_milli"]
 
 
 def glcm_features_np(px: "np.ndarray") -> tuple[int, int, int, int]:
@@ -433,25 +358,7 @@ def glcm_features_np(px: "np.ndarray") -> tuple[int, int, int, int]:
 def glcm_texture(df: DataFrame) -> DataFrame:
     """Per-kind GLCM texture rollup over decoded tiles:
     (tile_kind, n_tiles, n_pairs, contrast, energy, hom_milli)."""
-    schema = StructType(GLCM_SCHEMA_FIELDS)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for kind, buf in zip(pdf["tile_kind"], pdf["bytes"]):
-                px = decode_px(buf)
-                rows.append((kind,) + glcm_features_np(px))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "tile_kind", "n_pairs", "contrast", "energy",
-                    "hom_milli",
-                ],
-            )
-
-    feats = df.select("tile_kind", "bytes").mapInPandas(gen, schema=schema)
-    from pyspark.sql import functions as F
-
+    feats = _per_tile(df, glcm_features_np, GLCM_SCHEMA_FIELDS)
     return feats.groupBy("tile_kind").agg(
         F.count("*").cast("bigint").alias("n_tiles"),
         F.expr("CAST(sum(n_pairs) AS BIGINT)").alias("n_pairs"),
@@ -473,12 +380,7 @@ def glcm_texture(df: DataFrame) -> DataFrame:
 # Arrow worker.
 # ---------------------------------------------------------------------------
 
-OTSU_SCHEMA_FIELDS = [
-    StructField("tile_kind", StringType()),
-    StructField("thr", LongType()),
-    StructField("sep_q", LongType()),
-    StructField("fg_px", LongType()),
-]
+OTSU_SCHEMA_FIELDS = ["thr", "sep_q", "fg_px"]
 
 
 def otsu_features_np(px: "np.ndarray") -> tuple[int, int, int]:
@@ -510,22 +412,7 @@ def otsu_features_np(px: "np.ndarray") -> tuple[int, int, int]:
 def otsu_stats(df: DataFrame) -> DataFrame:
     """Per-kind Otsu rollup over decoded tiles: (tile_kind, n_tiles,
     sum_thr, min_thr, max_thr, sum_sep_q, fg_milli)."""
-    schema = StructType(OTSU_SCHEMA_FIELDS)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for kind, buf in zip(pdf["tile_kind"], pdf["bytes"]):
-                rows.append((kind,) + otsu_features_np(decode_px(buf)))
-            yield pd.DataFrame(
-                rows, columns=["tile_kind", "thr", "sep_q", "fg_px"]
-            )
-
-    feats = df.select("tile_kind", "bytes", "w", "h").mapInPandas(
-        gen, schema=schema
-    )
-    from pyspark.sql import functions as F
-
+    feats = _per_tile(df, otsu_features_np, OTSU_SCHEMA_FIELDS)
     tot = df.selectExpr(
         "tile_kind", "CAST(w AS BIGINT) * CAST(h AS BIGINT) AS px"
     ).groupBy("tile_kind").agg(
@@ -553,12 +440,7 @@ def otsu_stats(df: DataFrame) -> DataFrame:
 # pixels only — no padding policy to disagree on.
 # ---------------------------------------------------------------------------
 
-SOBEL_SCHEMA_FIELDS = [
-    StructField("tile_kind", StringType()),
-    StructField("n_interior", LongType()),
-    StructField("grad_sum", LongType()),
-    StructField("edges", LongType()),
-]
+SOBEL_SCHEMA_FIELDS = ["n_interior", "grad_sum", "edges"]
 
 
 def sobel_features_np(px: "np.ndarray") -> tuple[int, int, int]:
@@ -584,21 +466,7 @@ def sobel_features_np(px: "np.ndarray") -> tuple[int, int, int]:
 def sobel_stats(df: DataFrame) -> DataFrame:
     """Per-kind Sobel rollup: (tile_kind, n_tiles, n_interior,
     grad_sum, edges, edge_milli, mean_grad_milli)."""
-    schema = StructType(SOBEL_SCHEMA_FIELDS)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for kind, buf in zip(pdf["tile_kind"], pdf["bytes"]):
-                rows.append((kind,) + sobel_features_np(decode_px(buf)))
-            yield pd.DataFrame(
-                rows,
-                columns=["tile_kind", "n_interior", "grad_sum", "edges"],
-            )
-
-    feats = df.select("tile_kind", "bytes").mapInPandas(gen, schema=schema)
-    from pyspark.sql import functions as F
-
+    feats = _per_tile(df, sobel_features_np, SOBEL_SCHEMA_FIELDS)
     return feats.groupBy("tile_kind").agg(
         F.expr("CAST(count(*) AS BIGINT)").alias("n_tiles"),
         F.expr("CAST(sum(n_interior) AS BIGINT)").alias("n_interior"),
@@ -620,11 +488,9 @@ def sobel_stats(df: DataFrame) -> DataFrame:
 # the image-QA vignetting screen.
 # ---------------------------------------------------------------------------
 
+# per tile: (n_px, luma_sum) of zones 0, 1 and 2, stacked back into rows
 RADIAL_SCHEMA_FIELDS = [
-    StructField("tile_kind", StringType()),
-    StructField("zone", LongType()),
-    StructField("n_px", LongType()),
-    StructField("luma_sum", LongType()),
+    "n_px0", "luma_sum0", "n_px1", "luma_sum1", "n_px2", "luma_sum2",
 ]
 
 
@@ -652,21 +518,17 @@ def radial_profile_np(px: "np.ndarray") -> list[tuple[int, int, int]]:
 def radial_profile(df: DataFrame) -> DataFrame:
     """Per-(kind, zone) luma rollup: (tile_kind, zone, n_tiles, n_px,
     luma_sum, mean_luma_milli)."""
-    schema = StructType(RADIAL_SCHEMA_FIELDS)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for kind, buf in zip(pdf["tile_kind"], pdf["bytes"]):
-                for z, n, s in radial_profile_np(decode_px(buf)):
-                    rows.append((kind, z, n, s))
-            yield pd.DataFrame(
-                rows, columns=["tile_kind", "zone", "n_px", "luma_sum"]
-            )
-
-    feats = df.select("tile_kind", "bytes").mapInPandas(gen, schema=schema)
-    from pyspark.sql import functions as F
-
+    feats = _per_tile(
+        df,
+        lambda px: tuple(
+            v for _z, n, s in radial_profile_np(px) for v in (n, s)
+        ),
+        RADIAL_SCHEMA_FIELDS,
+    ).selectExpr(
+        "tile_kind",
+        "stack(3, 0L, n_px0, luma_sum0, 1L, n_px1, luma_sum1,"
+        " 2L, n_px2, luma_sum2) AS (zone, n_px, luma_sum)",
+    )
     return feats.groupBy("tile_kind", "zone").agg(
         F.expr("CAST(count(*) AS BIGINT)").alias("n_tiles"),
         F.expr("CAST(sum(n_px) AS BIGINT)").alias("n_px"),
@@ -687,12 +549,7 @@ def radial_profile(df: DataFrame) -> DataFrame:
 # integers leave the Arrow worker: n_blobs, largest blob px, fg px.
 # ---------------------------------------------------------------------------
 
-BLOB_SCHEMA_FIELDS = [
-    StructField("tile_kind", StringType()),
-    StructField("n_blobs", LongType()),
-    StructField("max_blob", LongType()),
-    StructField("fg_px", LongType()),
-]
+BLOB_SCHEMA_FIELDS = ["n_blobs", "max_blob", "fg_px"]
 
 
 def blob_features_np(px: "np.ndarray") -> tuple[int, int, int]:
@@ -732,21 +589,7 @@ def blob_features_np(px: "np.ndarray") -> tuple[int, int, int]:
 def blob_stats(df: DataFrame) -> DataFrame:
     """Per-kind blob rollup: (tile_kind, n_tiles, sum_blobs, max_blob,
     fg_px, blobs_per_tile_milli, mean_blob_px_milli)."""
-    schema = StructType(BLOB_SCHEMA_FIELDS)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for kind, buf in zip(pdf["tile_kind"], pdf["bytes"]):
-                rows.append((kind,) + blob_features_np(decode_px(buf)))
-            yield pd.DataFrame(
-                rows,
-                columns=["tile_kind", "n_blobs", "max_blob", "fg_px"],
-            )
-
-    feats = df.select("tile_kind", "bytes").mapInPandas(gen, schema=schema)
-    from pyspark.sql import functions as F
-
+    feats = _per_tile(df, blob_features_np, BLOB_SCHEMA_FIELDS)
     return (
         feats.groupBy("tile_kind")
         .agg(
@@ -778,13 +621,7 @@ def blob_stats(df: DataFrame) -> DataFrame:
 
 HARRIS_T = 1_000_000_000
 
-HARRIS_SCHEMA_FIELDS = [
-    StructField("tile_kind", StringType()),
-    StructField("n_resp", LongType()),
-    StructField("corners", LongType()),
-    StructField("resp_red", LongType()),
-    StructField("max_r20", LongType()),
-]
+HARRIS_SCHEMA_FIELDS = ["n_resp", "corners", "resp_red", "max_r20"]
 
 
 def harris_features_np(px: "np.ndarray") -> tuple[int, int, int, int]:
@@ -823,22 +660,7 @@ def harris_features_np(px: "np.ndarray") -> tuple[int, int, int, int]:
 def harris_stats(df: DataFrame) -> DataFrame:
     """Per-kind Harris corner rollup: (tile_kind, n_tiles, n_resp,
     corners, corner_milli, resp_red, max_r20)."""
-    schema = StructType(HARRIS_SCHEMA_FIELDS)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for kind, buf in zip(pdf["tile_kind"], pdf["bytes"]):
-                rows.append((kind,) + harris_features_np(decode_px(buf)))
-            yield pd.DataFrame(
-                rows,
-                columns=["tile_kind", "n_resp", "corners", "resp_red",
-                         "max_r20"],
-            )
-
-    feats = df.select("tile_kind", "bytes").mapInPandas(gen, schema=schema)
-    from pyspark.sql import functions as F
-
+    feats = _per_tile(df, harris_features_np, HARRIS_SCHEMA_FIELDS)
     return feats.groupBy("tile_kind").agg(
         F.expr("CAST(count(*) AS BIGINT)").alias("n_tiles"),
         F.expr("CAST(sum(n_resp) AS BIGINT)").alias("n_resp"),
@@ -872,12 +694,7 @@ _LBP_UNIFORM = np.array(
 )
 
 LBP_SCHEMA_FIELDS = [
-    StructField("tile_kind", StringType()),
-    StructField("n_interior", LongType()),
-    StructField("uniform_px", LongType()),
-    StructField("energy", LongType()),
-    StructField("dom_code", LongType()),
-    StructField("dom_count", LongType()),
+    "n_interior", "uniform_px", "energy", "dom_code", "dom_count",
 ]
 
 
@@ -905,22 +722,7 @@ def lbp_stats(df: DataFrame) -> DataFrame:
     """Per-kind LBP texture rollup: (tile_kind, n_tiles, n_interior,
     uniform_px, uniform_milli, energy, dom_code_min, dom_code_max,
     dom_count)."""
-    schema = StructType(LBP_SCHEMA_FIELDS)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for kind, buf in zip(pdf["tile_kind"], pdf["bytes"]):
-                rows.append((kind,) + lbp_features_np(decode_px(buf)))
-            yield pd.DataFrame(
-                rows,
-                columns=["tile_kind", "n_interior", "uniform_px",
-                         "energy", "dom_code", "dom_count"],
-            )
-
-    feats = df.select("tile_kind", "bytes").mapInPandas(gen, schema=schema)
-    from pyspark.sql import functions as F
-
+    feats = _per_tile(df, lbp_features_np, LBP_SCHEMA_FIELDS)
     return feats.groupBy("tile_kind").agg(
         F.expr("CAST(count(*) AS BIGINT)").alias("n_tiles"),
         F.expr("CAST(sum(n_interior) AS BIGINT)").alias("n_interior"),
@@ -945,15 +747,7 @@ def lbp_stats(df: DataFrame) -> DataFrame:
 # no atan2 ever formed. x = column, y = row.
 # ---------------------------------------------------------------------------
 
-MOMENTS_SCHEMA_FIELDS = [
-    StructField("tile_kind", StringType()),
-    StructField("m00", LongType()),
-    StructField("cx", LongType()),
-    StructField("cy", LongType()),
-    StructField("mu20", LongType()),
-    StructField("mu02", LongType()),
-    StructField("mu11", LongType()),
-]
+MOMENTS_SCHEMA_FIELDS = ["m00", "cx", "cy", "mu20", "mu02", "mu11"]
 
 
 def moments_features_np(
@@ -985,22 +779,7 @@ def moments_stats(df: DataFrame) -> DataFrame:
     """Per-kind image-moment rollup: (tile_kind, n_tiles, m00_sum,
     cx_sum, cy_sum, mu20_sum, mu02_sum, mu11_sum, aniso_x_tiles,
     mu11_pos_tiles)."""
-    schema = StructType(MOMENTS_SCHEMA_FIELDS)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for kind, buf in zip(pdf["tile_kind"], pdf["bytes"]):
-                rows.append((kind,) + moments_features_np(decode_px(buf)))
-            yield pd.DataFrame(
-                rows,
-                columns=["tile_kind", "m00", "cx", "cy", "mu20", "mu02",
-                         "mu11"],
-            )
-
-    feats = df.select("tile_kind", "bytes").mapInPandas(gen, schema=schema)
-    from pyspark.sql import functions as F
-
+    feats = _per_tile(df, moments_features_np, MOMENTS_SCHEMA_FIELDS)
     return feats.groupBy("tile_kind").agg(
         F.expr("CAST(count(*) AS BIGINT)").alias("n_tiles"),
         F.expr("CAST(sum(m00) AS BIGINT)").alias("m00_sum"),
@@ -1029,13 +808,7 @@ def moments_stats(df: DataFrame) -> DataFrame:
 # reference replays bit-for-bit.
 # ---------------------------------------------------------------------------
 
-MEDIAN3_SCHEMA_FIELDS = [
-    StructField("tile_kind", StringType()),
-    StructField("n_interior", LongType()),
-    StructField("changed", LongType()),
-    StructField("change_mass", LongType()),
-    StructField("max_change", LongType()),
-]
+MEDIAN3_SCHEMA_FIELDS = ["n_interior", "changed", "change_mass", "max_change"]
 
 
 def median3_features_np(px: "np.ndarray") -> tuple[int, int, int, int]:
@@ -1061,22 +834,7 @@ def median3_features_np(px: "np.ndarray") -> tuple[int, int, int, int]:
 def median3_stats(df: DataFrame) -> DataFrame:
     """Per-kind median-filter rollup: (tile_kind, n_tiles, n_interior,
     changed, changed_milli, change_mass, max_change)."""
-    schema = StructType(MEDIAN3_SCHEMA_FIELDS)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for kind, buf in zip(pdf["tile_kind"], pdf["bytes"]):
-                rows.append((kind,) + median3_features_np(decode_px(buf)))
-            yield pd.DataFrame(
-                rows,
-                columns=["tile_kind", "n_interior", "changed",
-                         "change_mass", "max_change"],
-            )
-
-    feats = df.select("tile_kind", "bytes").mapInPandas(gen, schema=schema)
-    from pyspark.sql import functions as F
-
+    feats = _per_tile(df, median3_features_np, MEDIAN3_SCHEMA_FIELDS)
     return feats.groupBy("tile_kind").agg(
         F.expr("CAST(count(*) AS BIGINT)").alias("n_tiles"),
         F.expr("CAST(sum(n_interior) AS BIGINT)").alias("n_interior"),
@@ -1100,12 +858,7 @@ def median3_stats(df: DataFrame) -> DataFrame:
 # and sharpest tile scores so degraded subsets stand out.
 # ---------------------------------------------------------------------------
 
-BLUR_SCHEMA_FIELDS = [
-    StructField("tile_kind", StringType()),
-    StructField("n_interior", LongType()),
-    StructField("var_mean", LongType()),
-    StructField("abs_mass", LongType()),
-]
+BLUR_SCHEMA_FIELDS = ["n_interior", "var_mean", "abs_mass"]
 
 
 def blur_features_np(px: "np.ndarray") -> tuple[int, int, int]:
@@ -1130,22 +883,7 @@ def blur_features_np(px: "np.ndarray") -> tuple[int, int, int]:
 def blur_stats(df: DataFrame) -> DataFrame:
     """Per-kind blur rollup: (tile_kind, n_tiles, n_interior,
     sharpest, blurriest, var_mean_sum, abs_mass)."""
-    schema = StructType(BLUR_SCHEMA_FIELDS)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for kind, buf in zip(pdf["tile_kind"], pdf["bytes"]):
-                rows.append((kind,) + blur_features_np(decode_px(buf)))
-            yield pd.DataFrame(
-                rows,
-                columns=["tile_kind", "n_interior", "var_mean",
-                         "abs_mass"],
-            )
-
-    feats = df.select("tile_kind", "bytes").mapInPandas(gen, schema=schema)
-    from pyspark.sql import functions as F
-
+    feats = _per_tile(df, blur_features_np, BLUR_SCHEMA_FIELDS)
     return feats.groupBy("tile_kind").agg(
         F.expr("CAST(count(*) AS BIGINT)").alias("n_tiles"),
         F.expr("CAST(sum(n_interior) AS BIGINT)").alias("n_interior"),

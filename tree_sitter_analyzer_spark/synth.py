@@ -127,43 +127,29 @@ def tiles_sql(from_clause: str = "orders", i: str = "o_orderkey") -> str:
     return f"SELECT\n  {i} AS i,\n  {cols}\nFROM {from_clause}"
 
 
-def _variant(amplify: int | None, dense: bool | None) -> tuple[int, bool]:
-    """(amplify, dense), unset ones read from SPARK_GRAFT_AMPLIFY and
-    SPARK_GRAFT_DENSE."""
-    if amplify is None:
-        amplify = int(os.environ.get("SPARK_GRAFT_AMPLIFY", "1"))
+def _dense(dense: bool | None = None) -> bool:
+    """``dense``, read from SPARK_GRAFT_DENSE when unset."""
     if dense is None:
         # Stretch-density smoke knob (see tile_exprs): never set by a
         # correctness run or any oracle path.
         dense = os.environ.get("SPARK_GRAFT_DENSE", "") == "1"
-    return amplify, dense
+    return dense
 
 
 def tiles_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    amplify: int | None = None,
-    dense: bool | None = None,
+    spark: SparkSession, sf_dir: str, dense: bool | None = None
 ) -> DataFrame:
     """The lazy plan ``tiles_df`` materializes: seed read, spread, and the
     LCG projection of ``tile_exprs``. One-shot readers (ingest's
     extraction of changed tiles) run it directly, leaving the serving
     cache alone."""
-    amplify, dense = _variant(amplify, dense)
+    dense = _dense(dense)
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     # The seed parquet is one small file → one input split. Real tile data
     # would arrive pre-partitioned; the synthetic table must be spread
     # explicitly or every downstream map-side operator runs on one task.
     parallelism = spark.sparkContext.defaultParallelism
-    # Repartition BEFORE any fan-out: the explode must run on all cores,
-    # not on the single input split of the small seed file.
     seed = orders.select("o_orderkey").repartition(parallelism, "o_orderkey")
-    if amplify > 1:
-        seed = seed.withColumn(
-            "rep", F.explode(F.sequence(F.lit(0), F.lit(amplify - 1)))
-        ).select(
-            (F.col("o_orderkey") * amplify + F.col("rep")).alias("o_orderkey")
-        )
     return seed.select(
         F.col("o_orderkey").alias("i"),
         *[
@@ -225,7 +211,7 @@ class Snapshot:
 
 
 # Materialized tiles snapshots, least recently used first: (application
-# id, real path, st_size, st_mtime_ns, amplify, dense) -> snapshot. The
+# id, real path, st_size, st_mtime_ns, dense) -> snapshot. The
 # zone layer reads no file: one snapshot per application id, outside
 # the LRU, so no tiles build can evict it. One lock guards both.
 TILES_CACHE_SLOTS = 4
@@ -253,7 +239,6 @@ def tiles_df(
     spark: SparkSession,
     sf_dir: str,
     with_bytes: bool = False,
-    amplify: int | None = None,
 ) -> DataFrame:
     """Spark-side tiles table from the SAME expressions, served from one
     materialization per source snapshot.
@@ -278,18 +263,13 @@ def tiles_df(
     ``with_bytes=True`` attaches the synthetic raster payload (pandas-UDF
     generated, see sources/codec.py) lazily on top of the cached leaf for
     the pixel pipeline; SQL-compared queries never touch ``bytes``.
-
-    ``amplify=k`` (or env SPARK_GRAFT_AMPLIFY) fans each seed row into k
-    distinct tiles (i = o_orderkey·k + rep) — used ONLY by the scaling
-    bench so task compute dominates scheduling overhead; correctness runs
-    always use k=1 (only the scaling bench sets the env).
     """
-    amplify, dense = _variant(amplify, None)
+    dense = _dense()
     app = spark.sparkContext.applicationId
     real = os.path.realpath(f"{sf_dir}/orders.parquet")
     st = os.stat(real)
     stamp = (real, st.st_size, st.st_mtime_ns)
-    key = (app, *stamp, amplify, dense)
+    key = (app, *stamp, dense)
     with _cache_lock:
         snap = _tiles_cache.get(key)
         if snap is None:
@@ -300,7 +280,7 @@ def tiles_df(
             for k in [k for k in _tiles_cache if k[1] == real and k[1:4] != stamp]:
                 _tiles_cache.pop(k).release()
             snap = _tiles_cache[key] = Snapshot(
-                tiles_plan(spark, sf_dir, amplify, dense))
+                tiles_plan(spark, sf_dir, dense))
             while len(_tiles_cache) > TILES_CACHE_SLOTS:
                 _tiles_cache.popitem(last=False)[1].release()
         else:
