@@ -9,9 +9,10 @@ from pyspark.sql import functions as F
 
 from tree_sitter_analyzer_spark import synth
 from tree_sitter_analyzer_spark.plans.sql_surface import register_views, run_user_sql
+from tree_sitter_analyzer_spark.registry import load_all
 from tree_sitter_analyzer_spark.sources import codec, multimodal
 
-from .conftest import SF_TINY
+from .conftest import SF_SMALL, SF_TINY
 
 
 def test_resize_roundtrip_shape_and_values(spark):
@@ -86,10 +87,27 @@ def test_video_container_roundtrip_sampling_and_truncation():
     assert multimodal.decode_video_frames(empty, 1).shape[0] == 0
 
 
+def _wave_writer_bytes(samples, sample_rate):
+    """The stdlib ``wave`` writer's PCM16 mono encoding of ``samples``."""
+    import io
+    import wave as _wave
+
+    bio = io.BytesIO()
+    with _wave.open(bio, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(sample_rate)
+        w.writeframes(np.asarray(samples, dtype="<i2").tobytes())
+    return bio.getvalue()
+
+
 def test_audio_features_real_decode_matches_numpy_reference(spark):
     """End-to-end real path: Spark encode→decode→features equals a pure
-    local numpy reference (no Spark involved) value-for-value."""
+    local numpy reference (no Spark involved) value-for-value. The WAV
+    bytes equal the stdlib writer's; a 0 Hz clip (which that writer
+    refuses) encodes and yields zero features instead of failing the job."""
     rows = [(i, None, 8000 if i % 2 else 16000, 1, 1000, 1) for i in range(8)]
+    rows.append((8, None, 0, 1, 1000, 1))
     df = spark.createDataFrame(rows, multimodal.AUDIO_SCHEMA)
     got = {
         r["media_id"]: (r["rms_milli"], r["zero_crossings"], r["decoder"])
@@ -97,8 +115,11 @@ def test_audio_features_real_decode_matches_numpy_reference(spark):
         .select("media_id", "rms_milli", "zero_crossings", "decoder")
         .collect()
     }
-    for mid, _, sr, _, dur, _ in rows:
-        buf = multimodal.encode_wav(multimodal.synth_audio_i16(mid, sr, dur), sr)
+    assert got[8] == (0, 0, "real")
+    for mid, _, sr, _, dur, _ in rows[:-1]:
+        samples = multimodal.synth_audio_i16(mid, sr, dur)
+        buf = multimodal.encode_wav(samples, sr)
+        assert buf == _wave_writer_bytes(samples, sr)
         x, rate = multimodal.decode_audio(buf)
         x = x[:rate]
         want_rms = int(np.sqrt(np.mean(x * x)) * 1000)
@@ -153,6 +174,14 @@ def test_sql_surface_select_and_gate(spark):
     assert env2["stats"]["returned"] == 10
     assert env2["stats"]["total_matches"] == 1500
     assert env2["stats"]["was_truncated"]
+
+    # A registry builder over other tables leaves the user's views alone.
+    count_li = "SELECT count(*) AS n FROM lineitem"
+    n_li = run_user_sql(spark, count_li)["results"][0]["n"]
+    load_all()["median_ci"].spark_fn(spark, SF_SMALL)
+    env3 = run_user_sql(spark, "SELECT image_id FROM tiles", max_rows=10)
+    assert env3["stats"]["total_matches"] == 1500
+    assert run_user_sql(spark, count_li)["results"][0]["n"] == n_li
 
     for bad in (
         "DROP TABLE tiles",

@@ -21,7 +21,11 @@ QUERIES = load_all()
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
     q = QUERIES[name]
+    views = spark.catalog.listTables()
     frame = q.spark_fn(spark, SF_TINY)
+    # Builders bind their inputs per statement (functions.sql_over), so
+    # none may add or drop a session view.
+    assert spark.catalog.listTables() == views
     if q.oracle is None:
         assert len(frame.toPandas()) >= 0  # rows-only check (non-SQL-expressible op)
         return

@@ -16,7 +16,6 @@ from tree_sitter_analyzer_spark import synth
 from tree_sitter_analyzer_spark.streaming.incremental import (
     classify_changes,
     merge_delta,
-    merge_upsert,
 )
 
 from .conftest import SF_TINY
@@ -138,11 +137,12 @@ def test_incremental_classify_and_merge(spark):
     assert classes["modified"] > 0
     assert classes["modified"] + classes["unchanged"] == v2.count()
 
-    # snapshot-mode merge reproduces v2 exactly
-    merged = merge_upsert(t.select("image_id", "phash"),
-                          v2.select("image_id", "phash"), "image_id")
-    # snapshot-mode keeps deleted keys (they're absent from incoming only
-    # in delta mode); emulate full sync: deletions applied explicitly
+    # upserts alone keep the keys v2 dropped: every old key survives
+    no_dels = t.select("image_id").where("1 = 0")
+    merged = merge_delta(t.select("image_id", "phash"),
+                         v2.select("image_id", "phash"), no_dels, "image_id")
+    assert merged.count() == n
+    # full sync: the dropped keys are applied as explicit deletes
     dels = t.join(v2.select("image_id"), "image_id", "left_anti").select("image_id")
     synced = merge_delta(t.select("image_id", "phash"),
                          v2.select("image_id", "phash"), dels, "image_id")

@@ -1,11 +1,18 @@
 """Cross-engine scalar helpers.
 
 Each helper emits SQL text for BOTH Spark and DuckDB where syntax differs
-(hex parsing, bit shifts, xor) so every operator keeps a single semantic
-definition with per-engine spellings verified equal by the parity suite.
+(hex parsing, identifier tokenization) so every operator keeps a single
+semantic definition with per-engine spellings verified equal by the parity
+suite. ``sql_over`` binds a Spark builder's input frames to such SQL text
+for one statement.
 """
 
 from __future__ import annotations
+
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 
 def md5int_spark(x: str) -> str:
@@ -26,21 +33,17 @@ def md5int_py(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
-def bit_spark(h: str, k: int) -> str:
-    return f"(CASE WHEN (shiftright({h}, {k}) & 1) = 1 THEN 1 ELSE -1 END)"
-
-
-def bit_duck(h: str, k: int) -> str:
-    return f"(CASE WHEN (({h} >> {k}) & 1) = 1 THEN 1 ELSE -1 END)"
-
-
-def xor_spark(a: str, b: str) -> str:
-    return f"({a} ^ {b})"
-
-
-def xor_duck(a: str, b: str) -> str:
-    # DuckDB's ^ is exponentiation; xor() is the bitwise op.
-    return f"xor({a}, {b})"
+def sql_over(spark: SparkSession, text: str, **frames: DataFrame) -> DataFrame:
+    """Run the SQL ``text`` over DataFrames bound by name for this one
+    statement: ``sql_over(spark, "SELECT count(*) FROM lineitem",
+    lineitem=df)``. Each frame enters as a CTE over PySpark's
+    statement-scoped argument view, so the body (often the DuckDB
+    oracle's own text) stays byte-for-byte unchanged, the bound names
+    shadow any session view of the same name, and the session's set of
+    temporary views is left as it was."""
+    ctes = ", ".join(f"{n} AS (SELECT * FROM {{{n}}})" for n in frames)
+    body = text.replace("{", "{{").replace("}", "}}")
+    return spark.sql(f"WITH {ctes} (\n{body}\n)", **frames)
 
 
 # --- identifier tokenization (F1: the reference's FTS tokenizer) -------------

@@ -1039,10 +1039,9 @@ def fs_linkage(docs: DataFrame) -> DataFrame:
     fn, prec_pm, rec_pm) of Fellegi-Sunter linkage between the corpus
     and its deterministic dirty replica."""
     spark = docs.sparkSession
-    docs.createOrReplaceTempView("fs_docs_v")
     a_sql, b_sql = _fs_sides_spark()
-    a = spark.sql(a_sql.format(d="fs_docs_v"))
-    b = spark.sql(b_sql.format(d="fs_docs_v"))
+    a = spark.sql(a_sql, d=docs)
+    b = spark.sql(b_sql, d=docs)
     cand = (
         a.join(
             b,

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import sql_over
 from ..synth import lcg
 
 # res-12 integer units; start boxes sit inside the tiles geography
@@ -1904,9 +1905,10 @@ FROM hw_home h JOIN hw_work w ON w.user_id = h.user_id"""
 
 
 def home_work(pings: DataFrame, res: int = HW_RES) -> DataFrame:
-    spark = pings.sparkSession
-    pings.createOrReplaceTempView("pings")
-    return spark.sql(f"WITH {home_work_body('spark', res)}")
+    return sql_over(
+        pings.sparkSession, f"WITH {home_work_body('spark', res)}",
+        pings=pings,
+    )
 
 
 def home_work_oracle(events_clause: str = "events",

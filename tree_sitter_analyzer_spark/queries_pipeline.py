@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions import sql_over
 from .operators import dedup, ingest, similarity, textstats
 from .registry import register
 
@@ -3870,8 +3871,7 @@ FROM tr_o o JOIN tr_r3 r ON r.tok = o.tok
     "corpus size because the iteration runs on the vocabulary frame.",
 )
 def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(_tr_sql("spark"))
+    return sql_over(spark, _tr_sql("spark"), documents=_docs(spark, sf_dir))
 
 
 # --- R372: cross-source quantile normalization ---------------------------------------------
@@ -3941,8 +3941,7 @@ FROM qn_m
     "drift).",
 )
 def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(_qn_sql("spark"))
+    return sql_over(spark, _qn_sql("spark"), documents=_docs(spark, sf_dir))
 
 
 # --- R379: TextTiling topic-boundary detection ---------------------------------------------
@@ -4039,8 +4038,7 @@ GROUP BY d.doc_id, d.n_gaps, d.mean_jac_milli, d.n_valleys,
     "fixed-stride slicing.",
 )
 def q_texttiling_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(_tt_sql("spark"))
+    return sql_over(spark, _tt_sql("spark"), documents=_docs(spark, sf_dir))
 
 
 # --- R381: embedding triplet evaluation ----------------------------------------------------
@@ -4144,10 +4142,10 @@ FROM te_j GROUP BY label
     "knn_label_noise and embedding_isotropy.",
 )
 def q_triplet_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").createOrReplaceTempView(
-        "embeddings"
+    return sql_over(
+        spark, _te_sql("spark"),
+        embeddings=spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
     )
-    return spark.sql(_te_sql("spark"))
 
 
 # --- Porter stemming (round-4 verdict #7) ------------------------------------
@@ -4279,8 +4277,7 @@ FROM tm_w2 CROSS JOIN tm_t"""
     "domain_mix_sample (which draws the actual sample).",
 )
 def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(_tmix_sql("spark"))
+    return sql_over(spark, _tmix_sql("spark"), documents=_docs(spark, sf_dir))
 
 
 # --- R398/R399: charset & encoding family (round 5) ---------------------------
@@ -4303,8 +4300,10 @@ from .operators import encoding as enc_ops
     "detect_encoding chain.",
 )
 def q_charset_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(enc_ops.audit_sql("spark"))
+    return sql_over(
+        spark, enc_ops.audit_sql("spark"),
+        documents=_docs(spark, sf_dir),
+    )
 
 
 @register(
@@ -4318,8 +4317,10 @@ def q_charset_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "invalid docs only), and C1-control scrubbing to U+FFFD.",
 )
 def q_charset_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(enc_ops.normalize_sql("spark"))
+    return sql_over(
+        spark, enc_ops.normalize_sql("spark"),
+        documents=_docs(spark, sf_dir),
+    )
 
 
 # --- R400-R406: oracled metadata cores for the rows-only decode family -------
@@ -4359,8 +4360,10 @@ FROM tiles GROUP BY fmt"""
     "audit reports that does not require touching pixels.",
 )
 def q_ingest_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _synth.tiles_df(spark, sf_dir).createOrReplaceTempView("tiles")
-    return spark.sql(_ingest_meta_sql("spark"))
+    return sql_over(
+        spark, _ingest_meta_sql("spark"),
+        tiles=_synth.tiles_df(spark, sf_dir),
+    )
 
 
 def _thumb_meta_sql(engine: str) -> str:
@@ -4385,8 +4388,10 @@ FROM tiles WHERE i <= 8000 GROUP BY fmt"""
     "integer SQL over the same key-filtered tile set (i <= 8000).",
 )
 def q_thumbnail_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _synth.tiles_df(spark, sf_dir).createOrReplaceTempView("tiles")
-    return spark.sql(_thumb_meta_sql("spark"))
+    return sql_over(
+        spark, _thumb_meta_sql("spark"),
+        tiles=_synth.tiles_df(spark, sf_dir),
+    )
 
 
 def _video_meta_sql(engine: str) -> str:
@@ -4415,10 +4420,10 @@ FROM clips GROUP BY codec"""
     "n_sampled_frames.",
 )
 def q_video_frame_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
-        "orders"
+    return sql_over(
+        spark, _video_meta_sql("spark"),
+        orders=spark.read.parquet(f"{sf_dir}/orders.parquet"),
     )
-    return spark.sql(_video_meta_sql("spark"))
 
 
 def _audio_meta_sql(engine: str) -> str:
@@ -4443,10 +4448,10 @@ FROM clips GROUP BY sample_rate"""
     "accounting against the real stdlib wave payloads.",
 )
 def q_audio_feature_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
-        "orders"
+    return sql_over(
+        spark, _audio_meta_sql("spark"),
+        orders=spark.read.parquet(f"{sf_dir}/orders.parquet"),
     )
-    return spark.sql(_audio_meta_sql("spark"))
 
 
 def _pvm_sql(engine: str) -> str:
@@ -4496,8 +4501,10 @@ GROUP BY p.hamming"""
     "without touching pixels.",
 )
 def q_pixel_verify_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _synth.tiles_df(spark, sf_dir).createOrReplaceTempView("tiles")
-    return spark.sql(f"WITH {_pvm_sql('spark')}")
+    return sql_over(
+        spark, f"WITH {_pvm_sql('spark')}",
+        tiles=_synth.tiles_df(spark, sf_dir),
+    )
 
 
 def _cvc_sql(engine: str) -> str:
@@ -4523,8 +4530,10 @@ FROM tiles WHERE i <= 8000 GROUP BY tile_kind, fmt"""
     "rollup inherits, driver-verifiable without decoding.",
 )
 def q_cv_input_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _synth.tiles_df(spark, sf_dir).createOrReplaceTempView("tiles")
-    return spark.sql(_cvc_sql("spark"))
+    return sql_over(
+        spark, _cvc_sql("spark"),
+        tiles=_synth.tiles_df(spark, sf_dir),
+    )
 
 
 def _emb_census_sql(engine: str) -> str:
@@ -4567,8 +4576,10 @@ FROM ec_v GROUP BY label"""
     "established integer-quantization spelling.",
 )
 def q_embedding_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _emb(spark, sf_dir).createOrReplaceTempView("embeddings")
-    return spark.sql(_emb_census_sql("spark"))
+    return sql_over(
+        spark, _emb_census_sql("spark"),
+        embeddings=_emb(spark, sf_dir),
+    )
 
 
 @register(
@@ -4582,5 +4593,7 @@ def q_embedding_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     "regression moves mass off the diagonal and fails the hash.",
 )
 def q_charset_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _docs(spark, sf_dir).createOrReplaceTempView("documents")
-    return spark.sql(enc_ops.confusion_sql("spark"))
+    return sql_over(
+        spark, enc_ops.confusion_sql("spark"),
+        documents=_docs(spark, sf_dir),
+    )

@@ -18,11 +18,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import synth
+from .functions import sql_over
 from .registry import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _sql_tables(
+    spark: SparkSession, sf_dir: str, text: str, *tables: str
+) -> DataFrame:
+    """``text`` over the named ``sf_dir`` tables, bound by ``sql_over``."""
+    return sql_over(spark, text, **{t: _t(spark, sf_dir, t) for t in tables})
 
 
 # --- A1/A2: grouped aggregation with exact decimals (TPC-H Q1 shape) -------
@@ -441,10 +449,10 @@ WHERE g.a_id IS NULL
     "to removed/added. The cross-match joins only the churn subset.",
 )
 def q_snapshot_diff_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    synth.tiles_df(spark, sf_dir).select(
-        "i", "image_id", "phash"
-    ).createOrReplaceTempView("tiles")
-    return spark.sql(f"WITH {_SDF_BODY}")
+    return sql_over(
+        spark, f"WITH {_SDF_BODY}",
+        tiles=synth.tiles_df(spark, sf_dir).select("i", "image_id", "phash"),
+    )
 
 
 # --- I1: incremental MERGE (CDC) ------------------------------------------------
@@ -10887,9 +10895,7 @@ ac_fin AS (
     "as the absorbing-chain certificate.",
 )
 def q_absorbing_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("events")
-    return spark.sql(_ac_sql(" DIV "))
+    return _sql_tables(spark, sf_dir, _ac_sql(" DIV "), "events")
 
 
 # --- R335: greedy materialized-view selection (Harinarayan cube lattice) -----------------
@@ -10979,8 +10985,7 @@ FROM vs_pick2 p"""
     "compaction_plan. Everything on the bounded 8-row lattice.",
 )
 def q_view_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_vs_sql(" DIV "))
+    return _sql_tables(spark, sf_dir, _vs_sql(" DIV "), "lineitem")
 
 
 # --- R338: Benjamini-Hochberg FDR over monthly randomization tests ------------------------
@@ -11479,11 +11484,8 @@ FROM jo_q q, jo_pick p
     "cardinality estimation auditing with real catalog statistics.",
 )
 def q_join_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for t in ("customer", "orders", "lineitem"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_REG["join_order_audit"].oracle.replace(
-        " // ", " DIV "
-    ))
+    sql = _REG["join_order_audit"].oracle.replace(" // ", " DIV ")
+    return _sql_tables(spark, sf_dir, sql, "customer", "orders", "lineitem")
 
 
 # --- R346: skyline depth (onion peeling ladder) -------------------------------------------
@@ -11721,8 +11723,7 @@ ucb_s{r} AS (
     "newsvendor/EOQ policies.",
 )
 def q_ucb_bandit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_ucb_sql(spark_side=True))
+    return _sql_tables(spark, sf_dir, _ucb_sql(spark_side=True), "orders")
 
 
 # --- R349: distribution-free median confidence interval -----------------------------------
@@ -11790,13 +11791,12 @@ FROM mc_lu u
     "interval estimation without distributions or resampling.",
 )
 def q_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     sql = _REG["median_ci"].oracle
     sql = sql.replace(" // ", " DIV ").replace(
         "SELECT unnest(range(1, 367)) AS doy",
         "SELECT explode(sequence(1, 366)) AS doy",
     )
-    return spark.sql(sql)
+    return _sql_tables(spark, sf_dir, sql, "lineitem")
 
 
 # --- R351: Huffman coding cost via the merge-sum identity ---------------------------------
@@ -11859,8 +11859,7 @@ FROM hf_tot t, hf_cost c
     "encoding_audit.",
 )
 def q_huffman_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_huff_sql(" DIV "))
+    return _sql_tables(spark, sf_dir, _huff_sql(" DIV "), "events")
 
 
 # --- R352: exact minimum-variance two-stream portfolio ------------------------------------
@@ -12060,9 +12059,7 @@ FROM als_x
     "perceptron_train (SGD) and decision_stump (trees).",
 )
 def q_als_halfstep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_als_sql("spark"))
+    return _sql_tables(spark, sf_dir, _als_sql("spark"), "lineitem", "orders")
 
 
 # --- R354: regression-discontinuity estimate with placebo ---------------------------------
@@ -12151,8 +12148,7 @@ FROM rdd_l l, rdd_r r, rdd_pl pl, rdd_pr pr
     "iv_wald (instruments); all arithmetic on the bounded calendar.",
 )
 def q_rdd_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_rdd_sql("spark"))
+    return _sql_tables(spark, sf_dir, _rdd_sql("spark"), "lineitem")
 
 
 # --- R355: process-mining conformance replay ----------------------------------------------
@@ -12220,8 +12216,7 @@ FROM cf_pair p CROSS JOIN cf_g g
     "this = specification vs reality).",
 )
 def q_conformance_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_cf_sql("spark"))
+    return _sql_tables(spark, sf_dir, _cf_sql("spark"), "events")
 
 
 # --- R356: Johnson two-machine flow-shop schedule -----------------------------------------
@@ -12298,9 +12293,9 @@ FROM js_seq s CROSS JOIN js_mj j CROSS JOIN js_mf f CROSS JOIN js_lb b
     "eoq_policy (lot sizing).",
 )
 def q_johnson_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
-    return spark.sql(_johnson_sql("spark"))
+    return _sql_tables(
+        spark, sf_dir, _johnson_sql("spark"), "lineitem", "part"
+    )
 
 
 # --- R357: hourly Lindley queue-depth replay ----------------------------------------------
@@ -12383,8 +12378,7 @@ FROM qd_q GROUP BY day
     "total event-hours of delay.",
 )
 def q_queue_depth_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_queue_sql("spark"))
+    return _sql_tables(spark, sf_dir, _queue_sql("spark"), "events")
 
 
 # --- R358: chain-ladder reserving triangle ------------------------------------------------
@@ -12489,9 +12483,9 @@ FROM cl_last l CROSS JOIN cl_fp p
     "triangle and forecast_eval's scorecard.",
 )
 def q_chain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_chainladder_sql("spark"))
+    return _sql_tables(
+        spark, sf_dir, _chainladder_sql("spark"), "orders", "lineitem"
+    )
 
 
 # --- R362: consistent-hash ring audit ------------------------------------------------------
@@ -12596,8 +12590,7 @@ GROUP BY j.srv8, g.n_moved, g.n_keys_total, g.load_total,
     "balance complements rendezvous_audit's HRW placement.",
 )
 def q_hash_ring_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
-    return spark.sql(_ring_sql("spark"))
+    return _sql_tables(spark, sf_dir, _ring_sql("spark"), "part")
 
 
 # --- R363: A-priori frequent brand triples -------------------------------------------------
@@ -12616,11 +12609,12 @@ def q_hash_ring_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _apriori_ctes(div: str, materialized: bool = False) -> str:
     # Spark inlines every CTE reference; ap_b feeds four downstream
-    # consumers, so the Spark side pre-materializes it (localCheckpoint
-    # + temp view) and splices a view scan here instead of re-running
-    # the join+distinct per consumer. The oracle keeps the inline CTE.
+    # consumers, so the Spark side pre-materializes it (localCheckpoint,
+    # see _apriori_prepare) and binds it as ``ap_b`` instead of
+    # re-running the join+distinct per consumer. The oracle keeps the
+    # inline CTE.
     base = (
-        "ap_b AS (SELECT oid, item FROM ap_b_mat),"
+        ""
         if materialized
         else """ap_b AS (
   SELECT DISTINCT l.l_orderkey AS oid, p.p_brand AS item
@@ -12668,14 +12662,14 @@ ap_s3 AS (
   GROUP BY 1, 2, 3)"""
 
 
-def _apriori_prepare(spark: SparkSession, sf_dir: str) -> None:
-    """Materialize the distinct (order, brand) basket frame once."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(
+def _apriori_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct (order, brand) basket frame, materialized once."""
+    return _sql_tables(
+        spark, sf_dir,
         "SELECT DISTINCT l.l_orderkey AS oid, p.p_brand AS item"
-        " FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("ap_b_mat")
+        " FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey",
+        "lineitem", "part",
+    ).localCheckpoint(eager=True)
 
 
 def _apriori_sql(engine: str) -> str:
@@ -12707,8 +12701,9 @@ WHERE s.support >= m.minsup
     "unordered counterpart of seq_patterns.",
 )
 def q_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _apriori_prepare(spark, sf_dir)
-    return spark.sql(_apriori_sql("spark"))
+    return sql_over(
+        spark, _apriori_sql("spark"), ap_b=_apriori_prepare(spark, sf_dir)
+    )
 
 
 # --- R365: range-partition planner ---------------------------------------------------------
@@ -12789,8 +12784,7 @@ CROSS JOIN rp_g g
     "zorder/hilbert writers rely on, made auditable.",
 )
 def q_range_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_rpp_sql("spark"))
+    return _sql_tables(spark, sf_dir, _rpp_sql("spark"), "orders")
 
 # --- R366: parallel Gale-Shapley stable matching -------------------------------------------
 #
@@ -12927,10 +12921,9 @@ FROM gs_m m CROSS JOIN gs_bp b CROSS JOIN gs_n n
     "two-sided market design beside bradley_terry.",
 )
 def q_gale_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
-    gs_r = spark.sql(
-        f"WITH {_gs_setup_sql('spark')} SELECT * FROM gs_r"
+    gs_r = _sql_tables(
+        spark, sf_dir, f"WITH {_gs_setup_sql('spark')} SELECT * FROM gs_r",
+        "lineitem", "part",
     ).localCheckpoint(eager=True)
     men = gs_r.select("m").distinct()
     st = men.selectExpr("m", "CAST(1 AS BIGINT) AS ptr").localCheckpoint(
@@ -13194,8 +13187,7 @@ FROM erl_c
     "(simulation) and littles_law (conservation).",
 )
 def q_erlang_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_erlang_sql("spark"))
+    return _sql_tables(spark, sf_dir, _erlang_sql("spark"), "events")
 
 
 # --- R370: Soundex phonetic blocking -------------------------------------------------------
@@ -13279,8 +13271,7 @@ FROM sdx_b b CROSS JOIN sdx_g g
     "fs_linkage and fuzzy_dup_pairs.",
 )
 def q_soundex_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
-    return spark.sql(_soundex_sql("spark"))
+    return _sql_tables(spark, sf_dir, _soundex_sql("spark"), "part")
 
 # --- R373: Young-Daly checkpoint-interval ladder -------------------------------------------
 #
@@ -13351,10 +13342,10 @@ def _yd_oracle() -> str:
     "snapshot_expiry.",
 )
 def q_youngdaly_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import synth as _synth
-
-    _synth.tiles_df(spark, sf_dir).createOrReplaceTempView("tiles")
-    return spark.sql(f"WITH {_yd_body(' DIV ')}")
+    return sql_over(
+        spark, f"WITH {_yd_body(' DIV ')}",
+        tiles=synth.tiles_df(spark, sf_dir),
+    )
 
 
 # --- R374: association rules from frequent triples -----------------------------------------
@@ -13421,8 +13412,9 @@ FROM ar_r r CROSS JOIN ap_ms m
     "market-basket story (itemsets -> rules).",
 )
 def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _apriori_prepare(spark, sf_dir)
-    return spark.sql(_rules_sql("spark"))
+    return sql_over(
+        spark, _rules_sql("spark"), ap_b=_apriori_prepare(spark, sf_dir)
+    )
 
 
 # --- R375: historical VaR / expected shortfall ---------------------------------------------
@@ -13496,8 +13488,7 @@ FROM vr_v
     "min_var_portfolio (planned).",
 )
 def q_var_es_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_var_sql("spark"))
+    return _sql_tables(spark, sf_dir, _var_sql("spark"), "lineitem")
 
 
 # --- R376: Denning working-set ladder ------------------------------------------------------
@@ -13579,9 +13570,7 @@ FROM ws_w GROUP BY tau
     "seasonal_decomposition (cyclic structure).",
 )
 def q_working_set_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
-    return spark.sql(_ws_sql("spark"))
+    return _sql_tables(spark, sf_dir, _ws_sql("spark"), "lineitem", "part")
 
 
 # --- R377: bullwhip-effect ratio -----------------------------------------------------------
@@ -13663,9 +13652,7 @@ FROM bw_n b CROSS JOIN bw_r r
     "excess_stock_suppliers.",
 )
 def q_bullwhip_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_bw_sql("spark"))
+    return _sql_tables(spark, sf_dir, _bw_sql("spark"), "orders", "lineitem")
 
 
 # --- R380: Markov removal-effect attribution -----------------------------------------------
@@ -13839,8 +13826,7 @@ FROM ma_eff e CROSS JOIN ma_t t
     "linear_attribution and shapley_attribution.",
 )
 def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_ma_sql(" DIV "))
+    return _sql_tables(spark, sf_dir, _ma_sql(" DIV "), "events")
 
 
 # --- R382: learned-index audit (RMI-lite) --------------------------------------------------
@@ -13925,8 +13911,7 @@ FROM li_r
     "physical-design family.",
 )
 def q_learned_index_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_li_sql("spark"))
+    return _sql_tables(spark, sf_dir, _li_sql("spark"), "orders")
 
 
 # --- R383: RANSAC consensus trend fit ------------------------------------------------------
@@ -14030,8 +14015,7 @@ FROM rs_s s CROSS JOIN rs_b b CROSS JOIN rs_w w
     "bounded fan, embarrassingly parallel at any scale.",
 )
 def q_ransac_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_ransac_sql("spark"))
+    return _sql_tables(spark, sf_dir, _ransac_sql("spark"), "lineitem")
 
 
 # --- R384: energy distance two-sample test -------------------------------------------------
@@ -14109,8 +14093,7 @@ FROM en_e
     "beside ks_test and wasserstein_drift.",
 )
 def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_energy_sql("spark"))
+    return _sql_tables(spark, sf_dir, _energy_sql("spark"), "lineitem")
 
 
 # --- R385: SLO burn-rate windows -----------------------------------------------------------
@@ -14207,8 +14190,7 @@ FROM sl_b
     "beside rate_policer, xmr_chart and sprt_monitor.",
 )
 def q_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_slo_sql("spark"))
+    return _sql_tables(spark, sf_dir, _slo_sql("spark"), "events")
 
 
 # --- R386: Neyman optimal stratified allocation --------------------------------------------
@@ -14304,9 +14286,7 @@ FROM ny_f f CROSS JOIN ny_pay p
     "(importance reweighting).",
 )
 def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
-    return spark.sql(_ney_sql("spark"))
+    return _sql_tables(spark, sf_dir, _ney_sql("spark"), "lineitem", "part")
 
 
 # --- R387: mean-excess ladder (POT diagnostic) ---------------------------------------------
@@ -14384,8 +14364,7 @@ FROM mx_e e CROSS JOIN mx_f f
     "block maxima.",
 )
 def q_mean_excess_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_mex_sql("spark"))
+    return _sql_tables(spark, sf_dir, _mex_sql("spark"), "lineitem")
 
 
 # --- R388: hash-collision capacity audit ---------------------------------------------------
@@ -14461,5 +14440,4 @@ FROM hc_q
     "bloom_filter_audit and f2_sketch_audit.",
 )
 def q_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_hc_sql("spark"))
+    return _sql_tables(spark, sf_dir, _hc_sql("spark"), "orders")

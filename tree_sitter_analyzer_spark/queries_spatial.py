@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from . import grid, synth
 from .operators import knn, pip_join, zonal
+from .functions import sql_over
 from .registry import register
 
 _CTES = synth.oracle_ctes()
@@ -3104,8 +3105,10 @@ FROM gd_d
     "users.",
 )
 def q_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tiles(spark, sf_dir).createOrReplaceTempView("tiles")
-    return spark.sql(f"WITH {_projection_sql(' DIV ')}")
+    return sql_over(
+        spark, f"WITH {_projection_sql(' DIV ')}",
+        tiles=_tiles(spark, sf_dir),
+    )
 
 
 def _metric_cells_sql(div: str) -> str:
@@ -3153,8 +3156,10 @@ FROM gm_m
     "a constant sheet.",
 )
 def q_metric_cell_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tiles(spark, sf_dir).createOrReplaceTempView("tiles")
-    return spark.sql(f"WITH {_metric_cells_sql(' DIV ')}")
+    return sql_over(
+        spark, f"WITH {_metric_cells_sql(' DIV ')}",
+        tiles=_tiles(spark, sf_dir),
+    )
 
 
 _GF_RES = 8
@@ -3223,8 +3228,10 @@ FROM gf_v GROUP BY band
     "ring expansion.",
 )
 def q_geodesic_nn_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tiles(spark, sf_dir).createOrReplaceTempView("tiles")
-    return spark.sql(f"WITH {_geodesic_flip_sql(' DIV ')}")
+    return sql_over(
+        spark, f"WITH {_geodesic_flip_sql(' DIV ')}",
+        tiles=_tiles(spark, sf_dir),
+    )
 
 
 # --- R368: PIP-join selectivity audit ------------------------------------------------------
@@ -3314,9 +3321,11 @@ FROM psa_x x LEFT JOIN psa_e e ON e.zone = x.zone
     "and zone frames.",
 )
 def q_pip_selectivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tiles(spark, sf_dir).createOrReplaceTempView("tiles")
-    synth.zones_df(spark).createOrReplaceTempView("zones")
-    return spark.sql(f"WITH {_psa_sql(' DIV ')}")
+    return sql_over(
+        spark, f"WITH {_psa_sql(' DIV ')}",
+        tiles=_tiles(spark, sf_dir),
+        zones=synth.zones_df(spark),
+    )
 
 
 # --- R371: 1-median facility placement -----------------------------------------------------
@@ -3405,8 +3414,10 @@ FROM p1_w
     "and accessibility_2sfca (catchment measurement).",
 )
 def q_p1_median_site(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tiles(spark, sf_dir).createOrReplaceTempView("tiles")
-    return spark.sql(f"WITH {_p1m_sql(' DIV ')}")
+    return sql_over(
+        spark, f"WITH {_p1m_sql(' DIV ')}",
+        tiles=_tiles(spark, sf_dir),
+    )
 
 
 # --- R378: metric kNN re-rank audit --------------------------------------------------------
@@ -3488,14 +3499,11 @@ FROM mk_nn n CROSS JOIN mk_g g
     "companion of geodesic_nn_flip's cell-level rate.",
 )
 def q_metric_knn_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tiles(spark, sf_dir).createOrReplaceTempView("tiles")
-    spark.range(synth.N_QUERY_POINTS).selectExpr(
-        *[
-            f"{e} AS {n}"
-            for n, e in synth.qpoint_exprs("id").items()
-        ]
-    ).createOrReplaceTempView("qpoints")
-    return spark.sql(f"WITH {_mkr_sql(' DIV ')}")
+    return sql_over(
+        spark, f"WITH {_mkr_sql(' DIV ')}",
+        tiles=_tiles(spark, sf_dir),
+        qpoints=synth.qpoints_df(spark),
+    )
 
 
 # --- R393: spatial autoregressive lag ladder (round 4) ------------------------
@@ -3566,8 +3574,10 @@ FROM sar_w1 w JOIN sar_n2 n2 ON n2.ix = w.ix AND n2.iy = w.iy"""
     "tiles aggregation.",
 )
 def q_sar_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tiles(spark, sf_dir).createOrReplaceTempView("tiles")
-    return spark.sql(f"WITH {_sar_sql('spark')}")
+    return sql_over(
+        spark, f"WITH {_sar_sql('spark')}",
+        tiles=_tiles(spark, sf_dir),
+    )
 
 
 @register(

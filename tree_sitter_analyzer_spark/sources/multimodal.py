@@ -5,9 +5,10 @@ typed metadata; decode / feature-extract / resize / frame-sample as
 pandas UDFs over ``mapInPandas``. All three decode paths are real:
 
 - image  — the deterministic raster codec (codec.py) decodes to pixels;
-- audio  — PCM16 WAV, encoded/decoded with the stdlib ``wave`` module
-  (no ffmpeg/libsndfile needed): ``decode_audio`` parses any mono/stereo
-  PCM16 RIFF/WAVE byte string into float32 samples + the header's rate;
+- audio  — PCM16 WAV (no ffmpeg/libsndfile needed): ``encode_wav`` packs
+  the canonical 44-byte RIFF header, ``decode_audio`` parses any mono/stereo
+  PCM16 RIFF/WAVE byte string with the stdlib ``wave`` reader into float32
+  samples + the header's rate;
 - video  — a self-describing container (``GVID`` header + length-prefixed
   frames, each frame an existing-codec GPNG/GJPG image):
   ``decode_video_frames`` seeks frame-to-frame via the length prefixes and
@@ -74,7 +75,8 @@ def resize_tiles(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Audio: PCM16 WAV via the stdlib wave module (real codec, no ffmpeg).
+# Audio: PCM16 WAV (real codec, no ffmpeg): struct-packed header, stdlib
+# ``wave`` reader.
 # ---------------------------------------------------------------------------
 
 AUDIO_SCHEMA = StructType(
@@ -113,16 +115,23 @@ def synth_audio_i16(media_id: int, sample_rate: int, duration_ms: int) -> np.nda
     return np.clip(x * 32767.0, -32768, 32767).astype(np.int16)
 
 
+# RIFF size, "WAVE", "fmt " chunk (PCM, channels, rate, byte rate, block
+# align, bits), "data" size — the layout the stdlib ``wave`` writer emits.
+_WAV_HEADER = struct.Struct("<4sI4s4sIHHIIHH4sI")
+
+
 def encode_wav(samples: np.ndarray, sample_rate: int, n_channels: int = 1) -> bytes:
-    """PCM16 RIFF/WAVE bytes via the stdlib ``wave`` writer. ``samples``
-    is int16, frame-interleaved when ``n_channels > 1``."""
-    bio = io.BytesIO()
-    with wave.open(bio, "wb") as w:
-        w.setnchannels(n_channels)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(np.asarray(samples, dtype="<i2").tobytes())
-    return bio.getvalue()
+    """PCM16 RIFF/WAVE bytes: the 44-byte canonical header, byte-identical
+    to the stdlib ``wave`` writer's, plus the samples. Unlike that writer
+    it accepts a 0 Hz rate, so a zero-rate clip encodes as a header with
+    no samples. ``samples`` is int16, frame-interleaved when
+    ``n_channels > 1``."""
+    data = np.asarray(samples, dtype="<i2").tobytes()
+    return _WAV_HEADER.pack(
+        b"RIFF", 36 + len(data), b"WAVE", b"fmt ", 16, 1, n_channels,
+        sample_rate, 2 * n_channels * sample_rate, 2 * n_channels, 16,
+        b"data", len(data),
+    ) + data
 
 
 def decode_audio(buf: bytes) -> tuple[np.ndarray, int]:
@@ -306,6 +315,16 @@ def audio_features(df: DataFrame) -> DataFrame:
     ).withColumn("decoder", F.lit("real"))
 
 
+def _luma_i64(px: "np.ndarray") -> "np.ndarray":
+    """Integer BT.601 luma (299R+587G+114B)//1000 of a decoded (h, w, 3)
+    uint8 image, as int64 — the gray level every per-tile stat reads."""
+    return (
+        px[..., 0].astype(np.int64) * 299
+        + px[..., 1].astype(np.int64) * 587
+        + px[..., 2].astype(np.int64) * 114
+    ) // 1000
+
+
 def _per_tile(
     df: DataFrame, features_np: Callable[[np.ndarray], tuple], names: list[str]
 ) -> DataFrame:
@@ -339,11 +358,7 @@ def glcm_features_np(px: "np.ndarray") -> tuple[int, int, int, int]:
     """numpy reference: (n_pairs, contrast, energy, hom_milli) for one
     decoded (h, w, 3) uint8 image — the same arithmetic the Spark pass
     runs (used verbatim by the pytest oracle)."""
-    gray = (
-        px[..., 0].astype(np.int64) * 299
-        + px[..., 1].astype(np.int64) * 587
-        + px[..., 2].astype(np.int64) * 114
-    ) // 1000
+    gray = _luma_i64(px)
     q = gray >> 5  # 8 levels
     a, b = q[:, :-1], q[:, 1:]
     idx = a * 8 + b
@@ -387,11 +402,7 @@ def otsu_features_np(px: "np.ndarray") -> tuple[int, int, int]:
     """numpy reference: (thr, sep_q, fg_px) for one decoded (h, w, 3)
     uint8 image. 6-bit luma histogram; sep_q = w0*w1*(mu0-mu1)^2 with
     mu in floored milli-levels; argmax with smallest-t tie-break."""
-    gray = (
-        px[..., 0].astype(np.int64) * 299
-        + px[..., 1].astype(np.int64) * 587
-        + px[..., 2].astype(np.int64) * 114
-    ) // 1000
+    gray = _luma_i64(px)
     q = gray >> 2  # 6-bit levels 0..63
     hist = np.bincount(q.ravel(), minlength=64).astype(np.int64)
     n = int(hist.sum())
@@ -446,11 +457,7 @@ SOBEL_SCHEMA_FIELDS = ["n_interior", "grad_sum", "edges"]
 def sobel_features_np(px: "np.ndarray") -> tuple[int, int, int]:
     """numpy reference: (n_interior, grad_sum, edges) for one decoded
     (h, w, 3) uint8 image."""
-    g = (
-        px[..., 0].astype(np.int64) * 299
-        + px[..., 1].astype(np.int64) * 587
-        + px[..., 2].astype(np.int64) * 114
-    ) // 1000
+    g = _luma_i64(px)
     gx = (
         g[:-2, 2:] + 2 * g[1:-1, 2:] + g[2:, 2:]
         - g[:-2, :-2] - 2 * g[1:-1, :-2] - g[2:, :-2]
@@ -498,11 +505,7 @@ def radial_profile_np(px: "np.ndarray") -> list[tuple[int, int, int]]:
     """numpy reference: [(zone, n_px, luma_sum)] for one decoded
     (h, w, 3) uint8 image."""
     h, w = px.shape[:2]
-    g = (
-        px[..., 0].astype(np.int64) * 299
-        + px[..., 1].astype(np.int64) * 587
-        + px[..., 2].astype(np.int64) * 114
-    ) // 1000
+    g = _luma_i64(px)
     ys = 2 * np.arange(h, dtype=np.int64)[:, None] - (h - 1)
     xs = 2 * np.arange(w, dtype=np.int64)[None, :] - (w - 1)
     d2 = ys * ys + xs * xs
@@ -556,11 +559,7 @@ def blob_features_np(px: "np.ndarray") -> tuple[int, int, int]:
     """numpy reference: (n_blobs, max_blob, fg_px) for one decoded
     (h, w, 3) uint8 image — 4-connected components of the Otsu
     foreground (levels > thr, same convention as otsu_features_np)."""
-    gray = (
-        px[..., 0].astype(np.int64) * 299
-        + px[..., 1].astype(np.int64) * 587
-        + px[..., 2].astype(np.int64) * 114
-    ) // 1000
+    gray = _luma_i64(px)
     q = gray >> 2
     thr, _sep, _fg = otsu_features_np(px)
     mask = q > thr
@@ -628,11 +627,7 @@ def harris_features_np(px: "np.ndarray") -> tuple[int, int, int, int]:
     """numpy reference: (n_resp, corners, resp_red, max_r20) for one
     decoded (h, w, 3) uint8 image. resp_red = sum over corners of
     R20 DIV 1024."""
-    g = (
-        px[..., 0].astype(np.int64) * 299
-        + px[..., 1].astype(np.int64) * 587
-        + px[..., 2].astype(np.int64) * 114
-    ) // 1000
+    g = _luma_i64(px)
     gx = (
         g[:-2, 2:] + 2 * g[1:-1, 2:] + g[2:, 2:]
         - g[:-2, :-2] - 2 * g[1:-1, :-2] - g[2:, :-2]
@@ -701,11 +696,7 @@ LBP_SCHEMA_FIELDS = [
 def lbp_features_np(px: "np.ndarray") -> tuple[int, int, int, int, int]:
     """numpy reference: (n_interior, uniform_px, energy, dom_code,
     dom_count) for one decoded (h, w, 3) uint8 image."""
-    g = (
-        px[..., 0].astype(np.int64) * 299
-        + px[..., 1].astype(np.int64) * 587
-        + px[..., 2].astype(np.int64) * 114
-    ) // 1000
+    g = _luma_i64(px)
     c = g[1:-1, 1:-1]
     code = np.zeros_like(c)
     for bit, (dy, dx) in enumerate(_LBP_OFFS):
@@ -756,11 +747,7 @@ def moments_features_np(
     """numpy reference: (m00, cx, cy, mu20, mu02, mu11) for one decoded
     (h, w, 3) uint8 image — floored integer centroid, exact central
     second moments about it."""
-    g = (
-        px[..., 0].astype(np.int64) * 299
-        + px[..., 1].astype(np.int64) * 587
-        + px[..., 2].astype(np.int64) * 114
-    ) // 1000
+    g = _luma_i64(px)
     h, w = g.shape
     ys = np.arange(h, dtype=np.int64)[:, None]
     xs = np.arange(w, dtype=np.int64)[None, :]
@@ -814,11 +801,7 @@ MEDIAN3_SCHEMA_FIELDS = ["n_interior", "changed", "change_mass", "max_change"]
 def median3_features_np(px: "np.ndarray") -> tuple[int, int, int, int]:
     """numpy reference: (n_interior, changed, change_mass, max_change)
     for one decoded (h, w, 3) uint8 image."""
-    g = (
-        px[..., 0].astype(np.int64) * 299
-        + px[..., 1].astype(np.int64) * 587
-        + px[..., 2].astype(np.int64) * 114
-    ) // 1000
+    g = _luma_i64(px)
     stack = np.stack([
         g[1 + dy:g.shape[0] - 1 + dy, 1 + dx:g.shape[1] - 1 + dx]
         for dy in (-1, 0, 1) for dx in (-1, 0, 1)
@@ -865,11 +848,7 @@ def blur_features_np(px: "np.ndarray") -> tuple[int, int, int]:
     """numpy reference: (n_interior, var_mean, abs_mass) for one
     decoded (h, w, 3) uint8 image. var_mean = floor of the Laplacian
     variance about its floored mean."""
-    g = (
-        px[..., 0].astype(np.int64) * 299
-        + px[..., 1].astype(np.int64) * 587
-        + px[..., 2].astype(np.int64) * 114
-    ) // 1000
+    g = _luma_i64(px)
     lap = (
         4 * g[1:-1, 1:-1]
         - g[:-2, 1:-1] - g[2:, 1:-1] - g[1:-1, :-2] - g[1:-1, 2:]

@@ -3,10 +3,11 @@
 Re-expresses the reference's incremental machinery:
 - ``IncrementalSync`` (incremental_sync.py:78-330): diff indexed rows vs
   current state by mtime-then-hash, classify new/modified/deleted/
-  unchanged, re-extract only changed → here a batch MERGE keyed on
-  (image_id, content version) — emulated with anti-join + union since no
-  Delta/Iceberg jars ship in this image (the write path is factored so a
-  MERGE INTO sink drops in).
+  unchanged, re-extract only changed → here ``classify_changes`` plus one
+  delta-mode MERGE (``merge_delta``: upserts + explicit deletes) keyed on
+  image_id — emulated with anti-join + union since no Delta/Iceberg jars
+  ship in this image (``table_format.IcebergFormat.merge_delta_sql`` is
+  the MERGE INTO it becomes on a real catalog).
 - ``hyphae_subscribe`` standing queries (watch_push_bridge.py:30-99):
   a selector re-evaluated on change, deltas pushed → here a Structured
   Streaming query re-running a compiled aggregation per micro-batch
@@ -37,16 +38,6 @@ def classify_changes(current: DataFrame, incoming: DataFrame, key: str,
         .when(F.col("fp_old") != F.col("fp_new"), "modified")
         .otherwise("unchanged")
         .alias("change"),
-    )
-
-
-def merge_upsert(current: DataFrame, incoming: DataFrame, key: str) -> DataFrame:
-    """MERGE emulation: incoming rows win on key collision; keys absent
-    from incoming survive unchanged; deletions are explicit (incoming is
-    the full new state here — the snapshot-sync mode). For delta-mode
-    (incoming = changed rows only) use ``merge_delta``."""
-    return incoming.unionByName(
-        current.join(incoming.select(key), key, "left_anti")
     )
 
 

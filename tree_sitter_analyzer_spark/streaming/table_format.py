@@ -3,31 +3,20 @@
 The north rule targets Iceberg tables (MERGE INTO, snapshot reads,
 manifest/changelog diffs).  No Iceberg jars ship in this sandbox image,
 so the engine executes its commit semantics with the parquet + atomic
-marker layout (checkpoint.py) and DataFrame MERGE algebra
-(incremental.py).  This module factors BOTH behind one interface so the
-real-cluster swap is mechanical:
-
-- ``IcebergFormat`` EMITS the exact Spark SQL / reader options each call
-  would run against a real Iceberg catalog (golden-tested in
-  tests/test_table_format.py — the contract a deployment engineer codes
-  against).  ``execute`` raises: there is no Iceberg runtime here, and a
-  silent parquet fallback inside the Iceberg impl would be a lie.
-- ``ParquetMarkerFormat`` executes today's emulation (the engine's
-  production path in this sandbox), golden-tested to produce the same
-  states the MERGE algebra defines.
+marker layout (``checkpoint.run_stage``) and the delta-mode DataFrame
+MERGE algebra (``incremental.merge_delta``), called directly.
+``IcebergFormat`` states what each of those calls becomes on a real
+cluster, so the swap is mechanical: it EMITS the exact Spark SQL / reader
+options each call would run against a real Iceberg catalog (golden-tested
+in tests/test_table_format.py — the contract a deployment engineer codes
+against).  ``execute`` raises: there is no Iceberg runtime here, and a
+silent parquet fallback inside the Iceberg impl would be a lie.
 
 Reference behavior being carried: incremental_sync.py:78-330 (diff +
 re-extract only changed), ast_cache.py:368-378 (commit markers).
 """
 
 from __future__ import annotations
-
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-
-from . import incremental
-from .checkpoint import run_stage
 
 
 class IcebergFormat:
@@ -41,16 +30,6 @@ class IcebergFormat:
 
     def _fq(self, table: str) -> str:
         return f"{self.catalog}.{self.namespace}.{table}"
-
-    def merge_upsert_sql(self, table: str, source_view: str, key: str) -> str:
-        """Snapshot-mode MERGE: incoming rows win, absent keys survive
-        (incremental.merge_upsert semantics)."""
-        return (
-            f"MERGE INTO {self._fq(table)} t USING {source_view} s "
-            f"ON t.{key} = s.{key} "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
 
     def merge_delta_sql(self, table: str, changes_view: str, key: str) -> str:
         """Delta-mode MERGE: ``changes_view`` carries an ``_op`` column
@@ -99,34 +78,3 @@ class IcebergFormat:
             "Spark runtime jar and a configured catalog, then execute "
             "the SQL this class emits"
         )
-
-
-class ParquetMarkerFormat:
-    """The sandbox execution path: parquet data + atomic commit markers
-    (checkpoint.py) and DataFrame MERGE algebra (incremental.py) — same
-    semantics the IcebergFormat SQL declares."""
-
-    def __init__(self, root: str):
-        self.root = root
-
-    def merge_upsert(
-        self, current: DataFrame, incoming: DataFrame, key: str
-    ) -> DataFrame:
-        return incremental.merge_upsert(current, incoming, key)
-
-    def merge_delta(
-        self,
-        current: DataFrame,
-        upserts: DataFrame,
-        deletes: DataFrame,
-        key: str,
-    ) -> DataFrame:
-        return incremental.merge_delta(current, upserts, deletes, key)
-
-    def commit_stage(
-        self, spark: SparkSession, stage: str, fingerprint: str, build
-    ) -> DataFrame:
-        return run_stage(spark, self.root, stage, fingerprint, build)
-
-    def snapshot_read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.root, stage, "data"))
